@@ -1299,8 +1299,8 @@ FROM zs WHERE abs(z) > 3.0
 
 def q_novel_grams(spark, sf_dir):
     """A10/A11 novelty core, DuckDB-PAIRED (round 4): the engine's
-    novel_sequences operator (chained-hash counting, broadcast anti-join,
-    tail-gram branch — the real scale plan) over a parsed-shaped frame built
+    novel_sequences operator (the per-chunk Arrow gram kernel over the
+    chunked signature base — the real scale plan) over a parsed-shaped frame built
     directly from events columns, vs a closed-form SQL oracle that generates
     every n-gram occurrence once with its overlap-recount weight
     (weight = least(W+1-L, N-p-L+1), PatternAnalyzer.cpp:42-72) and keeps

@@ -44,28 +44,12 @@ def _generate_input() -> None:
     spark.stop()
 
 
-def _cpu_ticks() -> tuple[int, int, int, int]:
-    """(user, sys, idle, steal) jiffies from /proc/stat — host-condition
-    accounting: this VM sees 15-22% hypervisor steal in degraded windows
-    (measured round 5), which is THE noise source behind the ±2-3x wall
-    swings; recording the mix per trial makes artifacts annotatable."""
-    with open("/proc/stat") as f:
-        p = f.readline().split()
-    return int(p[1]), int(p[3]), int(p[4]), int(p[8])
-
-
-def _cpu_mix(t0: tuple, t1: tuple) -> dict:
-    d = [b - a for a, b in zip(t0, t1)]
-    tot = max(1, sum(d))
-    return {k: round(100.0 * v / tot, 1)
-            for k, v in zip(("user_pct", "sys_pct", "idle_pct", "steal_pct"), d)}
-
-
 def _measure(cpus: int) -> dict:
     from intelligent_log_analysis_anomaly_detection_tool_spark.plans.pipeline import (
         run_concurrent_dag,
     )
     from intelligent_log_analysis_anomaly_detection_tool_spark.session import get_spark
+    from perfbench.procstat import CpuMix
 
     # IDENTICAL job spec at every parallelism level (the north rule measures
     # the same job on two cluster sizes): shuffle partitioning is a property
@@ -85,11 +69,13 @@ def _measure(cpus: int) -> dict:
     # (plans.pipeline.run_concurrent_dag): parse-count submitted first,
     # action-free branch plans constructed while it runs, then one writer
     # thread per branch — identical job structure at every parallelism level
-    ticks0 = _cpu_ticks()
+    # host-condition accounting: this VM sees 15-22% hypervisor steal in
+    # degraded windows, the noise source behind the ±2-3x wall swings
+    cpu = CpuMix(os.getpid())
     t0 = time.time()
     run_concurrent_dag(tr)
     wall = time.time() - t0
-    mix = _cpu_mix(ticks0, _cpu_ticks())
+    mix = cpu.read()
     spark.stop()
     return {"cpus": cpus, "rows": rows, "wall_sec": round(wall, 2),
             "turns_per_sec": round(rows / wall, 1),
@@ -196,7 +182,7 @@ def main() -> None:
         all_trials[cpus].append(r["turns_per_sec"])
         all_mixes.setdefault(cpus, []).append(
             {k: r.get(k) for k in
-             ("wall_sec", "user_pct", "sys_pct", "idle_pct", "steal_pct")}
+             ("wall_sec", "cpu_util", "user_pct", "steal_pct")}
         )
         if best is None or r["wall_sec"] < best["wall_sec"]:
             best = r

@@ -36,19 +36,6 @@ EXEC_CORES = int(os.environ.get("SPARK_GRAFT_EXEC_CORES", "2"))
 EXEC_MEM_MB = int(os.environ.get("SPARK_GRAFT_EXEC_MEM_MB", "16384"))
 
 
-def _cpu_ticks():
-    with open("/proc/stat") as f:
-        p = f.readline().split()
-    return int(p[1]), int(p[3]), int(p[4]), int(p[8])
-
-
-def _cpu_mix(t0, t1):
-    d = [b - a for a, b in zip(t0, t1)]
-    tot = max(1, sum(d))
-    return {k: round(100.0 * v / tot, 1)
-            for k, v in zip(("user_pct", "sys_pct", "idle_pct", "steal_pct"), d)}
-
-
 def _measure(n_exec: int) -> dict:
     from concurrent.futures import ThreadPoolExecutor
 
@@ -67,6 +54,7 @@ def _measure(n_exec: int) -> dict:
         dir_bytes,
         get_spark,
     )
+    from perfbench.procstat import CpuMix
 
     # identical job spec at every cluster size (north rule): shuffle
     # partitioning is a property of the job, not the cluster
@@ -97,7 +85,7 @@ def _measure(n_exec: int) -> dict:
     def noop(df):
         df.write.format("noop").mode("overwrite").save()
 
-    ticks0 = _cpu_ticks()
+    cpu = CpuMix(os.getpid())
     t0 = time.time()
     parsed = parse_stage(tr).persist()
     parsed.count()
@@ -115,7 +103,7 @@ def _measure(n_exec: int) -> dict:
         for f in [ex.submit(j) for j in jobs]:
             f.result()
     wall = time.time() - t0
-    mix = _cpu_mix(ticks0, _cpu_ticks())
+    mix = cpu.read()
     spark.stop()
     return {"executors": n_exec, "exec_cores": EXEC_CORES,
             "exec_mem_mb": EXEC_MEM_MB, "rows": rows,

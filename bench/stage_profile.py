@@ -26,12 +26,6 @@ sys.path.insert(0, REPO)
 INPUT_DIR = os.environ.get("SPARK_GRAFT_BENCH_INPUT", "/tmp/bench_transcripts")
 
 
-def _cpu_ticks():
-    with open("/proc/stat") as f:
-        p = f.readline().split()
-    return int(p[1]), int(p[3]), int(p[4]), int(p[8])
-
-
 def _measure(cpus: int) -> dict:
     from intelligent_log_analysis_anomaly_detection_tool_spark.functions.parse_select import (
         parse_stage_pipeline as parse_stage,
@@ -44,6 +38,7 @@ def _measure(cpus: int) -> dict:
         online_anomalies,
     )
     from intelligent_log_analysis_anomaly_detection_tool_spark.session import get_spark
+    from perfbench.procstat import CpuMix
 
     shuffle_parts = int(os.environ.get("SPARK_GRAFT_BENCH_SHUFFLE", "16"))
     t_boot0 = time.time()
@@ -58,17 +53,16 @@ def _measure(cpus: int) -> dict:
     stages: dict[str, dict] = {}
 
     def timed(name, fn):
-        ticks0 = _cpu_ticks()
+        cpu = CpuMix(os.getpid())
         t0 = time.time()
         out = fn()
         wall = time.time() - t0
-        d = [b - a for a, b in zip(ticks0, _cpu_ticks())]
-        tot = max(1, sum(d))
+        mix = cpu.read()
         stages[name] = {
             "wall_sec": round(wall, 2),
-            # CPU-seconds consumed on the whole 32-core box during the stage
-            "cpu_sec": round(32.0 * (d[0] + d[1]) / tot * wall, 1),
-            "steal_pct": round(100.0 * d[3] / tot, 1),
+            # CPU-seconds the driver, its JVM and Python workers used
+            "cpu_sec": round(mix["cpu_util"] / 100.0 * (os.cpu_count() or 1) * wall, 1),
+            "steal_pct": round(mix["steal_pct"], 1),
         }
         return out
 

@@ -3,9 +3,10 @@
 bench.py is the FROZEN driver contract; this harness is the round-6
 measurement companion (guide §1.4): it times any subset of the declared
 queries with the noop sink in one warm JVM, repeats each N times, and
-annotates every trial with the /proc/stat CPU mix over its duration —
-steal%/sys% being the tell for the degraded host windows documented in
-STATE.md (same-build walls swing 2-4x between windows on this VM).
+annotates every trial with the CPU mix over its duration
+(perfbench.procstat.CpuMix) — steal% being the tell for the degraded host
+windows documented in STATE.md (same-build walls swing 2-4x between
+windows on this VM).
 
 Usage:
   python bench_extra.py                          # all queries, 2 trials
@@ -28,23 +29,9 @@ CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 TRIALS = int(os.environ.get("SPARK_GRAFT_EXTRA_TRIALS", "2"))
 
 
-def _cpu_ticks():
-    with open("/proc/stat") as f:
-        p = f.readline().split()
-    return int(p[1]), int(p[3]), int(p[4]), int(p[8])
-
-
-def _cpu_mix(t0, t1):
-    d = [b - a for a, b in zip(t0, t1)]
-    tot = max(1, sum(d))
-    return {
-        k: round(100.0 * v / tot, 1)
-        for k, v in zip(("user_pct", "sys_pct", "idle_pct", "steal_pct"), d)
-    }
-
-
 def main() -> None:
     from intelligent_log_analysis_anomaly_detection_tool_spark.session import get_spark
+    from perfbench.procstat import CpuMix
 
     import __spark_entry__ as entrymod
 
@@ -62,11 +49,11 @@ def main() -> None:
         fn = qs[name]
         trials, trial_mix = [], []
         for _ in range(TRIALS):
-            c0, t0 = _cpu_ticks(), time.time()
+            mix, t0 = CpuMix(os.getpid()), time.time()
             spark.sparkContext.setJobDescription(f"bench_extra:{name}")
             fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
             trials.append(round(time.time() - t0, 3))
-            trial_mix.append(_cpu_mix(c0, _cpu_ticks()))
+            trial_mix.append(mix.read())
         out[name] = trials
         mixes[name] = trial_mix
     print(

@@ -19,7 +19,7 @@ from ..operators.aggregates import level_stats, minute_stats, source_stats, tota
 from ..operators.detectors.burst import burst_anomalies
 from ..operators.detectors.common import S_LOW, T_OTHER, as_anomaly
 from ..operators.detectors.frequency import frequency_anomalies
-from ..operators.detectors.pattern import pattern_anomalies
+from ..operators.detectors.pattern import pattern_anomalies, unpersist_pattern_caches
 from ..operators.detectors.rare_ip import rare_ip_anomalies
 from ..operators.detectors.timewindow import timewindow_anomalies
 from ..operators.enrich import dims, enrich
@@ -101,13 +101,9 @@ def offline_anomaly_builders(parsed: DataFrame, cfg: PipelineConfig = DEFAULT_CO
     """The offline analyzers as LAZY independent branch builders
     (main.cpp:367-409): name -> zero-arg callable returning the branch plan.
 
-    Callers that materialize anomalies (bench/scaling, per-detector sinks)
-    construct + submit these CONCURRENTLY from one thread each — standard
-    multi-job scheduling — so the cluster keeps working while the pattern
-    branch's one blocking plan-choice action (novel_sequences' repeated-set
-    fetch) runs; a single union action would leave construction of the whole
-    offline plan stuck behind it on the driver. Builders are lazy so a
-    caller can construct exactly one branch per thread."""
+    Building a branch runs no Spark job, so a caller can construct every
+    plan while another job runs and then submit the branches as concurrent
+    jobs (run_concurrent_dag does both)."""
     return {
         "frequency": lambda: frequency_anomalies(parsed, cfg.frequency),
         "pattern": lambda: pattern_anomalies(parsed, cfg.pattern),
@@ -139,15 +135,13 @@ def run_concurrent_dag(
     online->minutes chain and the three offline analyzers run as concurrent
     jobs, ``action`` (default: a noop-format write) materializing each leaf.
 
-    Round-5 refinement: the parse-materialize count is submitted FIRST, and
-    every action-free branch plan (online union, frequency, timewindow,
-    minute pivot) is constructed WHILE that job runs — previously the driver
-    built the online plan with the cluster idle (~2 s at sf0.1, measured
-    with bench/job_gaps.py), pure serial fraction that no core count can
-    shrink. Only the pattern branch's construction stays post-parse: its
-    plan choice runs a bounded ``limit().toPandas()`` action that must read
-    the already-materialized cache (running it during the parse count would
-    recompute the parse work concurrently — a cache stampede).
+    The parse-materialize count is submitted FIRST, and every branch plan
+    (online union, frequency, pattern, timewindow, minute pivot) is
+    constructed WHILE that job runs — none of them runs an action during
+    construction, so the driver never builds a plan with the cluster idle.
+    Once the pattern leaf's action returns, its memoized _sig_base cache is
+    released (unpersist_pattern_caches), so repeated passes leave no
+    MEMORY_AND_DISK base behind.
 
     Returns the persisted frames so callers control unpersist timing.
     """
@@ -167,6 +161,7 @@ def run_concurrent_dag(
         # action-free plan construction, overlapped with the parse job
         online = online_anomalies(parsed, cfg).persist()
         freq_plan = builders["frequency"]()
+        pattern_plan = builders["pattern"]()
         tw_plan = builders["timewindow"]()
         minutes_plan = minute_stats(parsed, online)
         parse_fut.result()
@@ -177,10 +172,16 @@ def run_concurrent_dag(
             online.count()
             action(minutes_plan)
 
+        def _pattern_then_release():
+            try:
+                action(pattern_plan)
+            finally:
+                unpersist_pattern_caches(parsed)
+
         futs = [
             ex.submit(_online_then_minutes),
             ex.submit(lambda: action(freq_plan)),
-            ex.submit(lambda: action(builders["pattern"]())),
+            ex.submit(_pattern_then_release),
             ex.submit(lambda: action(tw_plan)),
         ]
         for f in futs:

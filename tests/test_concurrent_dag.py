@@ -39,3 +39,29 @@ def test_run_concurrent_dag_matches_sequential(spark, fixture_df):
     finally:
         frames["parsed"].unpersist()
         frames["online"].unpersist()
+
+
+def test_run_concurrent_dag_releases_pattern_cache(spark, fixture_df):
+    """Once run_concurrent_dag returns, the pattern branch's memoized
+    _sig_base cache is gone: the only persistent RDDs it leaves behind are
+    the returned parsed and online frames."""
+    from intelligent_log_analysis_anomaly_detection_tool_spark.plans.pipeline import (
+        run_concurrent_dag,
+    )
+
+    jsc = spark.sparkContext._jsc
+
+    def persistent_ids():
+        return set(jsc.getPersistentRDDs().keySet().toArray())
+
+    before = persistent_ids()
+    frames = run_concurrent_dag(fixture_df, action=lambda df: df.count())
+    try:
+        assert "_graft_sig_base_memo" not in frames["parsed"].__dict__
+        left = persistent_ids() - before
+        assert len(left) == 2, left
+    finally:
+        frames["parsed"].unpersist(blocking=True)
+        frames["online"].unpersist(blocking=True)
+    # the two survivors were exactly parsed and online
+    assert persistent_ids() - before == set()

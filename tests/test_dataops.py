@@ -424,9 +424,11 @@ def test_cosine_near_dup_exact_matches_numpy(spark, emb):
 
 def test_jaccard_dense_kernel_adversarial(spark):
     """r6 kernel stress: many blocks (several groups per task, so the
-    buffer-reuse cache sees varying shapes), empty texts, exact duplicates,
-    a NULL text, and the threshold=0.0 edge (inter > 0 must still gate
-    emission). Forced-dense output must equal the count-join on all of it."""
+    buffer-reuse cache sees varying shapes), empty and whitespace-only
+    texts, exact duplicates, several NULL texts, and the threshold=0.0 edge
+    (inter > 0 must still gate emission). dense (auto-sized and forced to 9
+    blocks), count_join and prefix must return identical rows and dtypes on
+    all of it; two NULL texts must never pair."""
     import random
 
     from intelligent_log_analysis_anomaly_detection_tool_spark.operators.dedup import (
@@ -445,22 +447,25 @@ def test_jaccard_dense_kernel_adversarial(spark):
         if i % 23 == 0 and i:
             txt = rows[i - 1][1]
         rows.append((i, txt))
-    rows.append((601, None))
+    rows += [(601, None), (602, None), (603, " \t  "), (604, None)]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
+    nulls = {601, 602, 604}
+
+    def run(df):
+        return df.toPandas().sort_values(["doc_a", "doc_b"], ignore_index=True)
 
     for thr in (0.3, 0.0):
-        want = (
-            ngram_jaccard_pairs(docs, shingle_n=2, threshold=thr,
-                                plan="count_join")
-            .toPandas().sort_values(["doc_a", "doc_b"], ignore_index=True)
-        )
+        want = run(ngram_jaccard_pairs(docs, shingle_n=2, threshold=thr,
+                                       plan="count_join"))
+        assert len(want) > 0
+        assert not (want["doc_a"].isin(nulls) | want["doc_b"].isin(nulls)).any()
+        for plan in ("dense", "prefix"):
+            got = run(ngram_jaccard_pairs(docs, shingle_n=2, threshold=thr,
+                                          plan=plan))
+            pd.testing.assert_frame_equal(got, want, obj=plan)
         arr = docs.select(
             F.col("doc_id"),
             word_shingle_hashes(F.col("text"), 2).alias("shh_arr"),
         ).localCheckpoint(eager=True)
-        got = (
-            _jaccard_blocked_bitset(arr, "doc_id", thr, 9, "bigint")
-            .toPandas().sort_values(["doc_a", "doc_b"], ignore_index=True)
-        )
-        pd.testing.assert_frame_equal(got, want)
-        assert len(want) > 0
+        got = run(_jaccard_blocked_bitset(arr, "doc_id", thr, 9, "bigint"))
+        pd.testing.assert_frame_equal(got, want, obj="dense/9 blocks")

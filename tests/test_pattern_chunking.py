@@ -161,3 +161,68 @@ def test_unpersist_pattern_caches_frees_memo(spark, fixture_df):
     assert "_graft_sig_base_memo" not in parsed.__dict__
     assert not base.storageLevel.useMemory  # StorageLevel.NONE after release
     assert pattern_mod.unpersist_pattern_caches(parsed) == 0  # idempotent
+
+
+def _conv_frame(spark, conv_id, messages):
+    from intelligent_log_analysis_anomaly_detection_tool_spark.schema import (
+        TRANSCRIPTS_SCHEMA,
+    )
+
+    ts = pd.Timestamp("2024-01-01")
+    rows = [
+        (conv_id, i, "assistant",
+         f"2024-01-01 00:00:{i:02d} [INFO] svc: {m}", "none", ts)
+        for i, m in enumerate(messages)
+    ]
+    pdf = pd.DataFrame(
+        rows, columns=["conv_id", "turn_idx", "role", "text", "tool", "ts"])
+    return pdf, spark.createDataFrame(pdf, schema=TRANSCRIPTS_SCHEMA)
+
+
+def test_cross_chunk_repeats_are_not_novel(spark, monkeypatch):
+    """A W-gram and a tail gram that each occur once in two different buckets
+    of one conversation: every chunk sees a local count of 1 (and emits the
+    string), but the summed count is >= 2, so neither is novel."""
+    from oracle.reference_oracle import run_conv
+    from intelligent_log_analysis_anomaly_detection_tool_spark.operators.detectors.pattern import (
+        novel_sequences,
+        sequence_counts,
+    )
+
+    x = [f"evt {k} x" for k in range(10)]  # W = 10 distinct events
+    # turns 0..9 (buckets 0-2 at chunk 4), filler 10..14, turns 15..24
+    # (buckets 3-6): the tail X[8:10] ends the conversation
+    pdf, df = _conv_frame(spark, "conv_x", x + [f"fill {j} y" for j in range(5)] + x)
+    want = run_conv("conv_x", list(zip(pdf["turn_idx"], pdf["text"]))).seq_counts
+
+    monkeypatch.setattr(pattern_mod, "_CHUNK_ROWS", 4)
+    parsed = _parsed(df)
+    counts = {r["seq_sig"]: int(r["n"])
+              for _, r in sequence_counts(parsed).toPandas().iterrows()}
+    novel = set(novel_sequences(parsed).toPandas()["seq_sig"])
+
+    assert counts == want
+    assert novel == {s for s, n in want.items() if n == 1}
+    w_gram = next(s for s in counts
+                  if s.count("->") == 9 and "evt 0" in s.split("->")[0])
+    tail = next(s for s in counts
+                if s.count("->") == 1 and "evt 8" in s.split("->")[0])
+    for sig in (w_gram, tail):
+        assert counts[sig] >= 2 and sig not in novel, sig
+
+
+def test_pattern_anomalies_requires_ts_parsed(spark):
+    """pattern_anomalies raises on a frame without ts_parsed (its anomaly
+    window would be NULL); the counting consumers do not need it."""
+    from intelligent_log_analysis_anomaly_detection_tool_spark.operators.detectors.pattern import (
+        novel_sequences,
+        pattern_anomalies,
+        sequence_counts,
+    )
+
+    _, df = _conv_frame(spark, "conv_t", [f"evt {k % 4} t" for k in range(12)])
+    parsed = _parsed(df).drop("ts_parsed")
+    with pytest.raises(ValueError, match="ts_parsed"):
+        pattern_anomalies(parsed)
+    assert sequence_counts(parsed).count() > 0
+    novel_sequences(parsed).collect()

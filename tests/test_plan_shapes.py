@@ -94,44 +94,36 @@ def test_burst_single_exchange(spark, fixture_pdf):
     assert p.count("Exchange") == 1, p
 
 
-def test_sequence_counts_no_lead_string_exchange(spark, fixture_pdf):
-    """A10's representative-string attach must not re-exchange the lead
-    frame even in the SortMergeJoin fallback: the counts side co-partitions
-    by conv (requireAllClusterKeysForCoPartition=false), so no Exchange in
-    the plan carries the s1..s9 lead-string columns."""
-    import re
-
+def test_pattern_kernel_reads_cached_base_in_place(spark, fixture_pdf):
+    """The gram kernel groups the persisted _sig_base by (conv_id, bucket),
+    which is the base's own hash partitioning and sort prefix: the final
+    plan has no Exchange or Sort between the cached-base scan and the Arrow
+    group kernel, and exactly one Exchange (the (conv_id, gh) merge of the
+    chunk partials) after it."""
     from intelligent_log_analysis_anomaly_detection_tool_spark.functions.parse import (
         parse_stage,
     )
     from intelligent_log_analysis_anomaly_detection_tool_spark.operators.detectors.pattern import (
         sequence_counts,
+        unpersist_pattern_caches,
     )
     from intelligent_log_analysis_anomaly_detection_tool_spark.schema import (
         TRANSCRIPTS_SCHEMA,
     )
 
     fresh = spark.createDataFrame(fixture_pdf.head(800), schema=TRANSCRIPTS_SCHEMA)
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        import contextlib
-        import io
-
-        buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            sequence_counts(parse_stage(fresh)).explain("formatted")
-        fmt = buf.getvalue()
-        assert "SortMergeJoin" in fmt  # the fallback actually engaged
-        for sec in re.split(r"\n\n", fmt):
-            first = sec.strip().splitlines()[0] if sec.strip() else ""
-            if re.match(r"\(\d+\) Exchange", first):
-                inputs = " ".join(
-                    l for l in sec.splitlines() if l.startswith("Input")
-                )
-                assert not re.search(r"\bs[1-9]#", inputs), sec
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+    parsed = parse_stage(fresh)
+    q = sequence_counts(parsed)
+    q.collect()  # the adaptive plan is final once the cached base is built
+    lines = _plan(q).splitlines()
+    unpersist_pattern_caches(parsed)
+    kernel = next(i for i, l in enumerate(lines) if "FlatMapGroupsInArrow" in l)
+    scan = next(i for i, l in enumerate(lines) if "InMemoryTableScan" in l)
+    assert kernel < scan, lines
+    between = lines[kernel + 1:scan]
+    assert not [l for l in between if "Exchange" in l or "Sort" in l], lines
+    above = [l for l in lines[:kernel] if "Exchange " in l]
+    assert len(above) == 1 and "hashpartitioning" in above[0], lines
 
 
 def test_parse_evaluated_once_in_spike(spark, fixture_pdf):
