@@ -109,8 +109,8 @@ BURST_DRIVER_MIN_REPEATS = 5
 
 
 def entry(spark: SparkSession) -> DataFrame:
-    """Flagship: full pipeline (parse UDF -> detectors -> minute pivot) on
-    sf0.001; driver checks rows>0 and a stable schema."""
+    """Flagship: full pipeline (mapInArrow parse -> detectors -> minute
+    pivot) on sf0.001; driver checks rows>0 and a stable schema."""
     _utc(spark)
     from intelligent_log_analysis_anomaly_detection_tool_spark.functions.parse_select import (
         parse_stage,

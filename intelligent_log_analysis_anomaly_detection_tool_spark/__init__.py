@@ -2,8 +2,8 @@
 
 A from-scratch re-expression of the capabilities of the reference C++ tool
 (Xiad49/Intelligent-Log-Analysis-Anomaly-Detection-Tool, read-only at
-/root/reference) as idiomatic PySpark: DataFrame/SQL plans, vectorized
-Arrow-backed pandas UDFs for the grok/parse stage, broadcast-join enrichment,
+/root/reference) as idiomatic PySpark: DataFrame/SQL plans, one mapInArrow
+stage of pyarrow.compute kernels for grok/parse, broadcast-join enrichment,
 window-function detectors under stable (conv_id, turn_idx) ordering, and
 fan-out routed sinks.
 

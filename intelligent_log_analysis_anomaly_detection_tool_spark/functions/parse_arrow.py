@@ -1,36 +1,52 @@
-"""P1-P8 parse stage, Arrow-native variant.
+"""P1-P8: the parse kernel, the reference parser over pyarrow arrays.
 
-Same semantics as functions/parse.py (the trusted pandas implementation,
-itself oracle-parity-tested), but runs on pyarrow RecordBatches via
-``mapInArrow`` + ``pyarrow.compute`` — no Python string objects are ever
-materialized, which removes the dominant per-row cost of the pandas path
-(Arrow->pandas object conversion + object-dtype regex).
+``parse_arrays`` reproduces ``LogParser::parseLineDetailed``
+(LogParser.cpp:57-98) over a whole text column with ``pyarrow.compute``; no
+Python string object is ever materialized. ``parse_select.parse_stage`` runs
+it once per Arrow batch under ``mapInArrow``. The per-row reference it is
+tested against is ``oracle.reference_oracle.parse_line``.
+
+- trim; empty -> malformed "Empty line" (LogParser.cpp:61-67)
+- '{' prefix -> hand-rolled JSON scan with alias keys (LogParser.cpp:152-229)
+- else heuristic plain parse (LogParser.cpp:125-147):
+    * timestamp: first 19 chars, digits at fixed offsets, separators UNCHECKED
+      (TimeUtils.cpp:73-112 checks only the six numeric fields)
+    * level: ordered substring search over the UPPERCASED WHOLE LINE —
+      TRACE,DEBUG,INFO,WARN,WARNING,ERROR,FATAL,CRITICAL; first hit wins
+      (LogParser.cpp:306-338). A line containing both INFO and ERROR is Info.
+    * source: first ':'-prefix without spaces, else first '[...]' content —
+      for plain ``ts [LEVEL] svc - msg`` lines this captures the LEVEL token
+      (quirk, LogParser.cpp:340-366)
+    * message: drop first 20 chars, trim, split on single spaces keeping
+      empties, join tokens[2:] with single spaces == substring after the 2nd
+      space (LogParser.cpp:368-399)
+- malformed taxonomy: "Empty line" / "No matching pattern" /
+  "JSON missing required fields: ..." / "Invalid timestamp format"
+  (LogParser.cpp:65,96,171-178,214)
 
 All regexes are RE2 (pyarrow) — every pattern used here is RE2-safe (no
 backrefs in patterns; ``\\1`` appears only in replacements, which RE2
 supports). Timestamp parsing uses strptime on a re-rendered canonical string
 built from the six digit fields, preserving the reference's
-"digits at fixed offsets, separators unchecked" rule and rejecting
-impossible dates exactly like the oracle.
+"digits at fixed offsets, separators unchecked" rule.
 
-Known (documented) divergence from the pandas path: non-ASCII FULL case
-mapping in the level scan (python ``str.upper`` expands ligatures,
-``utf8_upper`` does not). Log level tokens are ASCII; the parity and fuzz
-suites cover the realistic alphabet.
+Documented divergences from the reference, shared with the oracle unless
+noted:
+
+- the reference routes timestamps through ``mktime`` (localtime + field
+  normalization, e.g. month 13 wraps). UTC is pinned and impossible dates
+  are parse failures; fixtures avoid such lines.
+- the level scan upper-cases with ``utf8_upper``, one code point to one
+  code point; the oracle's ``str.upper`` applies full case mapping, which
+  expands ligatures (e.g. U+FB01 -> "FI"). Level tokens are ASCII; the
+  edge, fixture and fuzz suites cover the realistic alphabet.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
-
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-
-from ..schema import PARSED_STRUCT
 
 CPP_WS = " \t\n\v\f\r"
 _WS_CLS = r"[ \t\n\v\f\r]*"
@@ -97,7 +113,10 @@ def _level_scan(upper, table):
 
 
 def _json_value(t, key: str):
-    """extractJsonRaw semantics (see parse.py) in RE2.
+    """extractJsonRaw semantics (LogParser.cpp:238-281) in RE2: find
+    ``"key"`` anywhere, first ':' after it, skip ws; quoted -> unescape
+    ``\\x -> x``; unquoted -> read to ','/'}' and trim; null when the key
+    or colon is absent, or only whitespace follows the colon.
 
     Probe order is lazy but result-identical to the original
     quoted/raw/dead full-column plan: the raw-value scan runs only over
@@ -273,7 +292,7 @@ def parse_arrays(text: pa.Array) -> dict:
     densely, and one gather per output column reassembles row order
     (``_scatter``). On the mixed corpus (~35% JSON / ~50% plain) this
     removes roughly half the regex work of the former full-column
-    compute-then-mask plan — same semantics, pinned by the pandas-parity
+    compute-then-mask plan — same semantics, pinned by the oracle-parity
     edge/fixture/fuzz suites."""
     if isinstance(text, pa.ChunkedArray):
         text = text.combine_chunks()
@@ -315,41 +334,3 @@ def parse_arrays(text: pa.Array) -> dict:
         ]),
     }
 
-
-def parse_stage_arrow(df: DataFrame, text_col: str = "text",
-                      drop: tuple[str, ...] = ()) -> DataFrame:
-    """mapInArrow parse: input columns + parsed columns, no pandas objects.
-
-    ``drop`` names columns omitted from the OUTPUT schema. Dropped input
-    columns other than ``text_col`` are also projected out BEFORE the
-    exchange, so they never cross the Arrow boundary in either direction;
-    ``text_col`` still crosses inbound (it is what gets parsed) but is not
-    serialized back when listed. A projection after mapInArrow cannot do
-    this — the map is a barrier Catalyst will not push a Project through."""
-    from pyspark.sql.types import StructType
-
-    drop_set = set(drop)
-    in_drop = [c for c in drop_set - {text_col} if c in df.columns]
-    if in_drop:
-        df = df.drop(*in_drop)
-    in_schema = df.schema
-    out_fields = [f for f in list(in_schema.fields) + list(PARSED_STRUCT.fields)
-                  if f.name not in drop_set]
-    out_schema = StructType(out_fields)
-    out_names = [f.name for f in out_fields]
-
-    def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            cols = {name: batch.column(i) for i, name in enumerate(batch.schema.names)}
-            parsed = parse_arrays(cols[text_col])
-            by_name = dict(cols)
-            by_name.update({f.name: parsed[f.name] for f in PARSED_STRUCT.fields})
-            arrays = [by_name[n] for n in out_names]
-            yield pa.RecordBatch.from_arrays(
-                [a.combine_chunks() if isinstance(a, pa.ChunkedArray) else a
-                 for a in arrays],
-                names=out_names,
-            )
-
-    out = df.filter(F.length(F.col(text_col)) > 0)
-    return out.mapInArrow(kernel, schema=out_schema)

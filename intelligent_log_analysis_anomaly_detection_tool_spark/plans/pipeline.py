@@ -1,11 +1,12 @@
 """The full parse -> enrich -> route -> aggregate plan.
 
 Spark lifecycle of the reference's single-threaded loop (SURVEY.md §3.1):
-read -> parse (one Arrow pandas UDF) -> enrich (broadcast joins) -> detector
-branches (window exprs + one applyInPandas) -> unionByName -> routing join ->
-fan-out sinks; aggregates (minute pivot, level/source stats) are sibling
-branches over the same cached parsed frame — no second parse pass (the
-reference re-reads the file for entries.csv, main.cpp:536-537; we persist).
+read -> parse (one mapInArrow stage) -> enrich (broadcast joins) -> detector
+branches (window exprs, burst's mapInPandas scan, pattern's applyInArrow
+kernel) -> unionByName -> routing join -> fan-out sinks; aggregates (minute
+pivot, level/source stats) are sibling branches over the same cached parsed
+frame — no second parse pass (the reference re-reads the file for
+entries.csv, main.cpp:536-537; we persist).
 """
 
 from __future__ import annotations
@@ -146,9 +147,6 @@ def run_concurrent_dag(
     Returns the persisted frames so callers control unpersist timing.
     """
     from concurrent.futures import ThreadPoolExecutor
-
-    from ..functions.parse_select import parse_stage_pipeline
-    from ..operators.aggregates import minute_stats
 
     if action is None:
         def action(df):  # noqa: E306 — default leaf materializer

@@ -24,7 +24,7 @@ class Op:
 
 
 def all_operators() -> list[Op]:
-    from .functions import config_loader, parse, parse_arrow
+    from .functions import config_loader, parse_select
     from .operators import dedup, enrich, multimodal, sessionize, similarity, textstats
     from .operators.aggregates import level_stats, minute_stats, source_stats, totals
     from .operators.detectors import (
@@ -38,8 +38,7 @@ def all_operators() -> list[Op]:
 
     return [
         Op("parse_stage", ("P1", "P2", "P3", "P4", "P5", "P6", "P7", "P8"),
-           parse.parse_stage, "oracle+fuzz"),
-        Op("parse_stage_arrow", ("P1-P8",), parse_arrow.parse_stage_arrow, "pytest"),
+           parse_select.parse_stage, "oracle+fuzz"),
         Op("config_loader", ("S10",), config_loader.load_config_file, "pytest"),
         Op("read_transcripts", ("S1",), transcripts.read_transcripts, "pytest"),
         Op("read_raw_log_file", ("S1",), transcripts.read_raw_log_file, "oracle"),

@@ -4,7 +4,8 @@ Pins UTC (the reference parses timestamps through ``mktime`` which is
 localtime-dependent, /root/reference/src/utils/TimeUtils.cpp:73-112; we pin
 UTC everywhere and generate fixtures in UTC so semantics are reproducible),
 enables AQE + skew-join handling (hot conversations are a first-class skew
-concern at scale), and Arrow for the pandas-UDF parse stage.
+concern at scale), and Arrow batches for the Python stages (the mapInArrow
+parse stage, the detector-description pandas UDFs).
 """
 
 from __future__ import annotations
@@ -100,14 +101,9 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # allow joins to reuse an existing subset-key partitioning instead
-        # of reshuffling BOTH sides over all join keys: the pattern stage's
-        # representative-string attach joins (conv_id, turn_idx) against a
-        # frame already hash-partitioned by conv_id — with the stock
-        # setting Spark re-exchanged the string-bearing side (plan-probed,
-        # round 4); with subset co-partitioning it stays put
-        .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
-        # Arrow transfer for pandas UDFs (the parse stage is Arrow-batched).
+        # Arrow for toPandas/createDataFrame; maxRecordsPerBatch sizes the
+        # batches every Python stage receives (the mapInArrow parse stage,
+        # the description pandas UDFs).
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "20000")
         # Generous driver memory for local[32] runs on the 128 GiB box.

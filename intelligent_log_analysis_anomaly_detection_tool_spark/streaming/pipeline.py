@@ -3,7 +3,7 @@
 The reference is strictly offline batch (its "streaming" is a single-pass
 loop; real-time support is listed under Future Improvements,
 /root/reference/README.md:162-167). This module is the engine's forward path:
-the SAME parse stage (pandas UDFs work unchanged on streaming frames), a
+the SAME parse stage (mapInArrow works unchanged on streaming frames), a
 watermarked per-minute windowed pivot (A1's streaming twin), and the one
 genuinely stateful operator (W3 burst) as ``applyInPandasWithState`` —
 per-key deque state with the reference's trim-on-emit semantics
@@ -21,7 +21,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..config import BurstConfig
-from ..functions.parse import parse_stage
+from ..functions.parse_select import parse_stage
 from ..schema import TRANSCRIPTS_SCHEMA
 
 

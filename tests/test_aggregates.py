@@ -3,7 +3,7 @@
 import pandas as pd
 import pytest
 
-from intelligent_log_analysis_anomaly_detection_tool_spark.functions.parse import (
+from intelligent_log_analysis_anomaly_detection_tool_spark.functions.parse_select import (
     parse_stage,
 )
 from intelligent_log_analysis_anomaly_detection_tool_spark.operators.aggregates import (

@@ -43,7 +43,7 @@ def test_rules_from_config():
 
 
 def test_rule_matches_and_plugins(spark, fixture_df, oracle_result):
-    from intelligent_log_analysis_anomaly_detection_tool_spark.functions.parse import (
+    from intelligent_log_analysis_anomaly_detection_tool_spark.functions.parse_select import (
         parse_stage,
     )
     from intelligent_log_analysis_anomaly_detection_tool_spark.operators.enrich import (
@@ -163,7 +163,7 @@ def test_extended_rules_mode(spark, fixture_df, oracle_result):
     from intelligent_log_analysis_anomaly_detection_tool_spark.config import (
         DEFAULT_CONFIG,
     )
-    from intelligent_log_analysis_anomaly_detection_tool_spark.functions.parse import (
+    from intelligent_log_analysis_anomaly_detection_tool_spark.functions.parse_select import (
         parse_stage,
     )
     from intelligent_log_analysis_anomaly_detection_tool_spark.operators.enrich import (

@@ -20,7 +20,7 @@ def _oracle_conv_counts(fixture_pdf, attr):
 
 
 def test_sequence_counts_full_parity(spark, fixture_df, fixture_pdf):
-    from intelligent_log_analysis_anomaly_detection_tool_spark.functions.parse import (
+    from intelligent_log_analysis_anomaly_detection_tool_spark.functions.parse_select import (
         parse_stage,
     )
     from intelligent_log_analysis_anomaly_detection_tool_spark.operators.detectors.pattern import (
@@ -45,7 +45,7 @@ def test_pattern_stats_parity(spark, fixture_df, fixture_pdf):
     the top-10 by frequency. The reference's top-10 tie order is
     nondeterministic (std::sort on freq only); both sides here break ties by
     signature asc, so the comparison is well-defined."""
-    from intelligent_log_analysis_anomaly_detection_tool_spark.functions.parse import (
+    from intelligent_log_analysis_anomaly_detection_tool_spark.functions.parse_select import (
         parse_stage,
     )
     from intelligent_log_analysis_anomaly_detection_tool_spark.operators.detectors.pattern import (
@@ -86,7 +86,7 @@ def test_pattern_stats_parity(spark, fixture_df, fixture_pdf):
 
 
 def test_message_hash_counts_full_parity(spark, fixture_df, fixture_pdf):
-    from intelligent_log_analysis_anomaly_detection_tool_spark.functions.parse import (
+    from intelligent_log_analysis_anomaly_detection_tool_spark.functions.parse_select import (
         parse_stage,
     )
     from intelligent_log_analysis_anomaly_detection_tool_spark.operators.detectors.frequency import (

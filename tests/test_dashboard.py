@@ -4,7 +4,7 @@
 import os
 import xml.dom.minidom
 
-from intelligent_log_analysis_anomaly_detection_tool_spark.functions.parse import (
+from intelligent_log_analysis_anomaly_detection_tool_spark.functions.parse_select import (
     parse_stage,
 )
 

@@ -17,7 +17,7 @@ from intelligent_log_analysis_anomaly_detection_tool_spark.dashboard import (
     LEVELS,
     chart_aggregates,
 )
-from intelligent_log_analysis_anomaly_detection_tool_spark.functions.parse import (
+from intelligent_log_analysis_anomaly_detection_tool_spark.functions.parse_select import (
     parse_stage,
 )
 from intelligent_log_analysis_anomaly_detection_tool_spark.operators.aggregates import (

@@ -5,7 +5,7 @@ import numpy as np
 import pandas as pd
 import pytest
 
-from intelligent_log_analysis_anomaly_detection_tool_spark.functions.parse import (
+from intelligent_log_analysis_anomaly_detection_tool_spark.functions.parse_select import (
     parse_stage,
 )
 

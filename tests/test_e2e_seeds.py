@@ -12,7 +12,7 @@ SORT_COLS = ["detector", "conv_id", "turn_idx", "description",
 
 @pytest.mark.parametrize("seed,n_convs", [(7, 120), (1234, 250)])
 def test_all_anomalies_match_oracle(spark, seed, n_convs):
-    from intelligent_log_analysis_anomaly_detection_tool_spark.functions.parse import (
+    from intelligent_log_analysis_anomaly_detection_tool_spark.functions.parse_select import (
         parse_stage,
     )
     from intelligent_log_analysis_anomaly_detection_tool_spark.plans.pipeline import (

@@ -33,7 +33,7 @@ def _conv(spark, offsets_and_lines, conv="c0"):
 
 
 def _parse(spark, df):
-    from intelligent_log_analysis_anomaly_detection_tool_spark.functions.parse import (
+    from intelligent_log_analysis_anomaly_detection_tool_spark.functions.parse_select import (
         parse_stage,
     )
 
@@ -103,18 +103,20 @@ def test_message_20_char_boundary(spark):
     """extractMessage drops the first 20 chars only when len > 20
     (LogParser.cpp:374-377): a line of exactly 20 chars keeps everything and
     needs >2 space-tokens."""
-    from intelligent_log_analysis_anomaly_detection_tool_spark.functions.parse import (
-        parse_text_frame,
+    import pyarrow as pa
+
+    from intelligent_log_analysis_anomaly_detection_tool_spark.functions.parse_arrow import (
+        parse_arrays,
     )
 
     # 19-char ts + 1 char = len 20 -> no prefix drop -> tokens of whole line
     line20 = "2025-06-01 12:00:00x"
     # 21 chars -> drop 20 -> remainder "y z w" -> tokens y,z,w -> message "w"
     line21p = "2025-06-01 12:00:00 y z w"
-    out = parse_text_frame(pd.Series([line20, line21p]))
+    out = parse_arrays(pa.array([line20, line21p], pa.string()))
     # line20: tokens = ['2025-06-01','12:00:00x'] -> only 2 -> malformed
-    assert bool(out.loc[0, "malformed"])
-    assert out.loc[1, "message"] == "w"
+    assert out["malformed"].to_pylist() == [True, False]
+    assert out["message"][1].as_py() == "w"
 
 
 def test_rare_ip_exactly_five(spark):

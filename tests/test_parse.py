@@ -1,4 +1,4 @@
-"""Parse-stage parity: vectorized pandas path == per-row oracle == quirks.
+"""Parse-stage parity: Arrow kernel == Spark stage == per-row oracle == quirks.
 
 The per-turn text-equality invariant (BASELINE.json input_hint) is the
 full-frame comparison in test_parse_parity_fixture.
@@ -7,11 +7,16 @@ full-frame comparison in test_parse_parity_fixture.
 import datetime as dt
 
 import pandas as pd
+import pyarrow as pa
 import pytest
 
-from intelligent_log_analysis_anomaly_detection_tool_spark.functions.parse import (
+from intelligent_log_analysis_anomaly_detection_tool_spark.functions.parse_arrow import (
+    parse_arrays,
+)
+from intelligent_log_analysis_anomaly_detection_tool_spark.functions.parse_select import (
+    PIPELINE_DROP,
     parse_stage,
-    parse_text_frame,
+    parse_stage_pipeline,
 )
 from oracle.reference_oracle import parse_line
 
@@ -33,6 +38,9 @@ EDGE_LINES = [
     "2025-01-01 10:00:00",
     "2025-01-01 10:00:00 x",
     "2025-01-01 10:00:00 [DEBUG] a b",
+    # exactly 20 chars: no prefix drop, so the message is tokens[2:] of the
+    # whole line (LogParser.cpp:374-377; separators unchecked)
+    "2025 01 01 10:00:00x",
     # colon-source rule: token before first ':' with no space
     "source: 2025-01-01 10:00:00 message words here",
     # json happy path
@@ -81,10 +89,15 @@ def _oracle_frame(lines):
     return pd.DataFrame(rows)
 
 
+def _arrow_frame(lines):
+    out = parse_arrays(pa.array(lines, pa.string()))
+    return pd.DataFrame({k: v.to_pandas() for k, v in out.items()})
+
+
 def _normalize(df):
     out = df.copy()
     out["level_ord"] = out["level_ord"].astype("Float64")
-    out["ts_parsed"] = pd.to_datetime(out["ts_parsed"])
+    out["ts_parsed"] = pd.to_datetime(out["ts_parsed"]).astype("datetime64[ns]")
     out["error"] = out["error"].astype(object).where(out["error"].notna(), None)
     out["source"] = out["source"].astype(object).where(out["source"].notna(), None)
     out["message"] = out["message"].astype(object).where(out["message"].notna(), None)
@@ -94,7 +107,7 @@ def _normalize(df):
 
 
 def test_parse_edge_lines_match_oracle():
-    got = _normalize(parse_text_frame(pd.Series(EDGE_LINES)))
+    got = _normalize(_arrow_frame(EDGE_LINES))
     want = _normalize(_oracle_frame(EDGE_LINES))
     pd.testing.assert_frame_equal(got, want)
 
@@ -102,22 +115,22 @@ def test_parse_edge_lines_match_oracle():
 def test_parse_parity_fixture(fixture_pdf):
     """Per-turn equality of every parsed field on the full t_small fixture."""
     lines = fixture_pdf["text"].tolist()
-    got = _normalize(parse_text_frame(pd.Series(lines)))
+    got = _normalize(_arrow_frame(lines))
     want = _normalize(_oracle_frame(lines))
     pd.testing.assert_frame_equal(got, want)
 
 
 def test_source_quirk_bracket_is_level():
     """P4 quirk: plain '[LEVEL]' lines parse source == LEVEL token."""
-    out = parse_text_frame(pd.Series(
-        ["2025-01-01 10:00:00 [INFO] auth-service - User login successful"]))
+    out = _arrow_frame(
+        ["2025-01-01 10:00:00 [INFO] auth-service - User login successful"])
     assert out.loc[0, "source"] == "INFO"
     assert out.loc[0, "message"] == "- User login successful"
 
 
 def test_level_order_quirk():
-    out = parse_text_frame(pd.Series(
-        ["2025-01-01 10:00:00 [ERROR] svc - info mismatch found"]))
+    out = _arrow_frame(
+        ["2025-01-01 10:00:00 [ERROR] svc - info mismatch found"])
     assert out.loc[0, "level_ord"] == 2  # INFO wins by search order
 
 
@@ -138,3 +151,17 @@ def test_parse_stage_spark_matches_pandas(spark, fixture_df, fixture_pdf):
     got_n.insert(0, "conv_id", got["conv_id"])
     got_n.insert(1, "turn_idx", got["turn_idx"])
     pd.testing.assert_frame_equal(got_n, want)
+
+
+def test_parse_stage_pipeline_narrow(spark, fixture_df):
+    """parse_stage_pipeline == parse_stage minus PIPELINE_DROP: same rows,
+    same values in every kept column, and none of the dropped columns in the
+    schema (they are dropped inside the exchange without disturbing the kept
+    ones)."""
+    got = parse_stage_pipeline(fixture_df)
+    assert not set(PIPELINE_DROP) & set(got.columns)
+    want = parse_stage(fixture_df).drop(*PIPELINE_DROP)
+    assert got.columns == want.columns
+    g = got.toPandas().sort_values(["conv_id", "turn_idx"], ignore_index=True)
+    w = want.toPandas().sort_values(["conv_id", "turn_idx"], ignore_index=True)
+    pd.testing.assert_frame_equal(g, w)

@@ -1,14 +1,14 @@
-"""Property test: the vectorized pandas parse == the per-row oracle on
+"""Property test: the Arrow parse kernel == the per-row oracle on
 adversarial inputs (quote/backslash/colon/bracket soup, truncated JSON,
 unicode, odd whitespace)."""
 
-import pandas as pd
+import pyarrow as pa
 from hypothesis import given, settings, strategies as st
 
-from intelligent_log_analysis_anomaly_detection_tool_spark.functions.parse import (
-    parse_text_frame,
+from intelligent_log_analysis_anomaly_detection_tool_spark.functions.parse_arrow import (
+    parse_arrays,
 )
-from oracle.reference_oracle import parse_line
+from oracle.reference_oracle import CPP_WS, parse_line
 
 ALPHABET = (
     "abcXYZ019 \t:{}[]\"'\\,-.@#%?_"
@@ -36,23 +36,23 @@ line_st = st.one_of(
 def _row(line):
     e, err = parse_line(line)
     if e is None:
-        return ("MALFORMED", err, None, None, None, None)
-    return ("OK", None, e["ts"], e["level"], e["source"], e["message"])
+        was_json = line.strip(CPP_WS).startswith("{")
+        return (True, err, was_json, None, None, None, None)
+    return (False, None, e["was_json"], e["ts"], e["level"], e["source"],
+            e["message"])
 
 
 @settings(max_examples=300, deadline=None)
 @given(st.lists(line_st, min_size=1, max_size=20))
 def test_parse_matches_oracle_fuzz(lines):
-    got = parse_text_frame(pd.Series(lines))
-    for i, line in enumerate(lines):
-        status, err, ts, level, source, message = _row(line)
-        if status == "MALFORMED":
-            assert bool(got.loc[i, "malformed"]), (line, got.loc[i].to_dict())
-            assert got.loc[i, "error"] == err, (line, got.loc[i, "error"], err)
-        else:
-            assert not got.loc[i, "malformed"], (line, got.loc[i].to_dict())
-            got_ts = got.loc[i, "ts_parsed"]
-            assert int(pd.Timestamp(got_ts).timestamp()) == ts, line
-            assert int(got.loc[i, "level_ord"]) == level, line
-            assert got.loc[i, "source"] == source, line
-            assert got.loc[i, "message"] == message, line
+    out = parse_arrays(pa.array(lines, pa.string()))
+    ts_us = out["ts_parsed"].cast(pa.int64()).to_pylist()
+    got = zip(
+        out["malformed"].to_pylist(), out["error"].to_pylist(),
+        out["was_json"].to_pylist(),
+        [None if t is None else t // 1_000_000 for t in ts_us],
+        out["level_ord"].to_pylist(), out["source"].to_pylist(),
+        out["message"].to_pylist(),
+    )
+    for line, row in zip(lines, got):
+        assert row == _row(line), line

@@ -26,7 +26,7 @@ def _sub(fixture_df, fixture_pdf, n=12):
 
 
 def _parsed(sub_df):
-    from intelligent_log_analysis_anomaly_detection_tool_spark.functions.parse import (
+    from intelligent_log_analysis_anomaly_detection_tool_spark.functions.parse_select import (
         parse_stage,
     )
 

@@ -17,7 +17,7 @@ def test_parquet_pushdown_and_pruning(spark):
 
 
 def test_enrich_is_broadcast_only(spark, fixture_df):
-    from intelligent_log_analysis_anomaly_detection_tool_spark.functions.parse import (
+    from intelligent_log_analysis_anomaly_detection_tool_spark.functions.parse_select import (
         parse_stage,
     )
     from intelligent_log_analysis_anomaly_detection_tool_spark.operators.enrich import (
@@ -31,7 +31,7 @@ def test_enrich_is_broadcast_only(spark, fixture_df):
 
 
 def test_routing_is_broadcast(spark, fixture_df):
-    from intelligent_log_analysis_anomaly_detection_tool_spark.functions.parse import (
+    from intelligent_log_analysis_anomaly_detection_tool_spark.functions.parse_select import (
         parse_stage,
     )
     from intelligent_log_analysis_anomaly_detection_tool_spark.operators.enrich import dims
@@ -54,7 +54,7 @@ def test_fused_online_single_sort(spark, fixture_pdf):
     """W1+W2 fused pass: ONE Exchange hashpartitioning(conv_id, source) and
     ONE Sort — the rank/prefix windows order by (epoch, turn_idx) and the
     range frames by (epoch), both satisfied by the same physical sort."""
-    from intelligent_log_analysis_anomaly_detection_tool_spark.functions.parse import (
+    from intelligent_log_analysis_anomaly_detection_tool_spark.functions.parse_select import (
         parse_stage,
     )
     from intelligent_log_analysis_anomaly_detection_tool_spark.operators.detectors.online_fused import (
@@ -77,7 +77,7 @@ def test_burst_single_exchange(spark, fixture_pdf):
     shuffle: the count-window already hash-partitions by (conv_id,
     burst_key), and the executed plan keeps exactly ONE Exchange (verified
     round 4 per ADVICE; this pins it)."""
-    from intelligent_log_analysis_anomaly_detection_tool_spark.functions.parse import (
+    from intelligent_log_analysis_anomaly_detection_tool_spark.functions.parse_select import (
         parse_stage,
     )
     from intelligent_log_analysis_anomaly_detection_tool_spark.operators.detectors.burst import (
@@ -100,7 +100,7 @@ def test_pattern_kernel_reads_cached_base_in_place(spark, fixture_pdf):
     plan has no Exchange or Sort between the cached-base scan and the Arrow
     group kernel, and exactly one Exchange (the (conv_id, gh) merge of the
     chunk partials) after it."""
-    from intelligent_log_analysis_anomaly_detection_tool_spark.functions.parse import (
+    from intelligent_log_analysis_anomaly_detection_tool_spark.functions.parse_select import (
         parse_stage,
     )
     from intelligent_log_analysis_anomaly_detection_tool_spark.operators.detectors.pattern import (
@@ -127,12 +127,13 @@ def test_pattern_kernel_reads_cached_base_in_place(spark, fixture_pdf):
 
 
 def test_parse_evaluated_once_in_spike(spark, fixture_pdf):
-    """The nondeterministic flag must keep Catalyst from duplicating the
-    Arrow parse stage per consumer (one ArrowEvalPython for parse + one for
-    the description formatter). Uses a FRESH uncached input so the cache
-    manager cannot substitute persisted subtrees from other tests (their
-    plan descriptions would pollute the string counts)."""
-    from intelligent_log_analysis_anomaly_detection_tool_spark.functions.parse import (
+    """The parse stage is one mapInArrow node, a barrier Catalyst does not
+    split or push consumers through, so the spike detector's several reads
+    of the parsed columns share a single evaluation: exactly one MapInArrow
+    in the plan. Uses a FRESH uncached input so the cache manager cannot
+    substitute persisted subtrees from other tests (their plan descriptions
+    would pollute the string counts)."""
+    from intelligent_log_analysis_anomaly_detection_tool_spark.functions.parse_select import (
         parse_stage,
     )
     from intelligent_log_analysis_anomaly_detection_tool_spark.operators.detectors.spike import (
@@ -146,6 +147,6 @@ def test_parse_evaluated_once_in_spike(spark, fixture_pdf):
     p = _plan(spike_anomalies(parse_stage(fresh)))
     if "InMemoryRelation" in p:  # another test cached an identical subtree
         return
-    assert p.count("parse_text_frame") == 1, p
+    assert p.count("MapInArrow") == 1, p
     # merged window sorts: one rn sort + one epoch sort
     assert p.count("+- Sort") <= 3

@@ -5,7 +5,7 @@ import pandas as pd
 
 
 def test_raw_log_file_roundtrip(spark, fixture_pdf, tmp_path):
-    from intelligent_log_analysis_anomaly_detection_tool_spark.functions.parse import (
+    from intelligent_log_analysis_anomaly_detection_tool_spark.functions.parse_select import (
         parse_stage,
     )
     from intelligent_log_analysis_anomaly_detection_tool_spark.sources.transcripts import (

@@ -28,7 +28,7 @@ REF_LOG = "/root/reference/data-set/mixed_format_log_2_3MB.log"
 
 @pytest.mark.skipif(not os.path.exists(REF_LOG), reason="reference corpus absent")
 def test_reference_corpus_counts(spark):
-    from intelligent_log_analysis_anomaly_detection_tool_spark.functions.parse import (
+    from intelligent_log_analysis_anomaly_detection_tool_spark.functions.parse_select import (
         parse_stage,
     )
     from intelligent_log_analysis_anomaly_detection_tool_spark.plans.pipeline import (

@@ -13,7 +13,7 @@ def stream_input(spark, fixture_df, tmp_path_factory):
 
 
 def test_streaming_minute_counts_match_batch(spark, stream_input, fixture_df):
-    from intelligent_log_analysis_anomaly_detection_tool_spark.functions.parse import (
+    from intelligent_log_analysis_anomaly_detection_tool_spark.functions.parse_select import (
         parse_stage,
     )
     from intelligent_log_analysis_anomaly_detection_tool_spark.streaming.pipeline import (

@@ -51,7 +51,7 @@ def build_and_run() -> None:
 def main() -> None:
     import pandas as pd
 
-    from intelligent_log_analysis_anomaly_detection_tool_spark.functions.parse import (
+    from intelligent_log_analysis_anomaly_detection_tool_spark.functions.parse_select import (
         parse_stage,
     )
     from intelligent_log_analysis_anomaly_detection_tool_spark.operators.aggregates import (
