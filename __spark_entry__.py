@@ -1185,7 +1185,9 @@ FROM scan WHERE fired
 
 def q_statistical_detector(spark, sf_dir):
     """W2 z-score detector (rate windows + Welford-equivalent prefix stats)
-    end-to-end on the transcript rendering. DuckDB-PAIRED since round 5:
+    end-to-end on the transcript rendering: the statistical rows of the
+    fused W1+W2 pass (online_fused.spike_statistical_anomalies), the one
+    W1/W2 implementation the pipeline runs. DuckDB-PAIRED since round 5:
     the oracle re-derives the full chain (transcript rendering -> parse
     quirk source=[LEVEL] token -> trailing-600s rate -> prefix mean/
     stddev_samp -> |z|>3 filter -> severity mapping -> printf description)
@@ -1195,11 +1197,13 @@ def q_statistical_detector(spark, sf_dir):
     from intelligent_log_analysis_anomaly_detection_tool_spark.functions.parse_select import (
         parse_stage,
     )
-    from intelligent_log_analysis_anomaly_detection_tool_spark.operators.detectors.statistical import (
-        statistical_anomalies,
+    from intelligent_log_analysis_anomaly_detection_tool_spark.operators.detectors.online_fused import (
+        spike_statistical_anomalies,
     )
 
-    out = statistical_anomalies(parse_stage(events_as_transcripts(spark, sf_dir)))
+    out = spike_statistical_anomalies(
+        parse_stage(events_as_transcripts(spark, sf_dir))
+    ).filter(F.col("detector") == "statistical")
     # score rounded to 6 decimals for the hash compare (house style, cf.
     # zscore_prefix/spike_windows): Spark's Welford stddev and DuckDB's
     # segment-tree stddev legitimately differ in the last ulps (<= ~3e-15
@@ -1211,7 +1215,8 @@ def q_statistical_detector(spark, sf_dir):
 def _statistical_detector_sql() -> str:
     """Closed-form oracle for q_statistical_detector.
 
-    Mirrors statistical.py:52 on the events_as_transcripts rendering:
+    Mirrors the statistical half of online_fused.spike_statistical_anomalies
+    on the events_as_transcripts rendering:
     - source = the parse quirk's bracket capture = the LEVEL token
       (LogParser.cpp:340-366 quirk: first '[...]' content), i.e.
       error->ERROR / purchase->WARN / else INFO

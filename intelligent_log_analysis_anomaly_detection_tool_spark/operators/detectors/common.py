@@ -9,8 +9,9 @@ Trailing event-time counts use the identity (valid under monotonic ts):
 
     |{j <= i : ts_j >= ts_i - W}|  =  row_number_i - |{j : ts_j < ts_i - W}|
 
-i.e. a file-order rank minus a ``rangeBetween(unboundedPreceding, -(W+1))``
-count. This matches the reference's "evict age > W" semantics exactly
+i.e. an (epoch, turn_idx) rank (``event_order_window``) minus a
+``rangeBetween(unboundedPreceding, -(W+1))`` count (``older_than_window``).
+This matches the reference's "evict age > W" semantics exactly
 (rows exactly W old are KEPT) and, unlike a naive ``rangeBetween(-W, 0)``
 count, does not leak later same-timestamp rows into the current row's window.
 """
@@ -61,22 +62,11 @@ def older_than_window(window_s: int, *part_cols: str) -> WindowSpec:
 def trailing_count(window_s: int, *part_cols: str) -> Column:
     """Count of retained rows in the trailing event-time window (inclusive).
 
-    Rank is FILE-order (turn_idx) — the reference's arrival-order semantics —
-    and eviction is epoch-order; identical under the engine's documented
-    per-conversation ts-monotonicity invariant (module docstring)."""
-    rn = F.row_number().over(file_order_window(*part_cols))
-    older = F.count(F.lit(1)).over(older_than_window(window_s, *part_cols))
-    return rn - older
-
-
-def trailing_count_event_time(window_s: int, *part_cols: str) -> Column:
-    """Event-time variant of ``trailing_count``: rank by (epoch, turn_idx)
-    instead of file order, so the rank-minus-evicted identity holds even when
-    timestamps arrive out of file order. Used by the THRESHOLD rule, which is
-    an explicit event-time respecification (enrich.rule_matches); identical
-    to ``trailing_count`` on monotonic input."""
-    w_ev = Window.partitionBy(*part_cols).orderBy("epoch", "turn_idx")
-    rn = F.row_number().over(w_ev)
+    Rank is by (epoch, turn_idx) and eviction by epoch, so the
+    rank-minus-evicted identity holds even when timestamps arrive out of
+    file order. Used by the THRESHOLD rule, an explicit event-time
+    respecification (enrich.rule_matches)."""
+    rn = F.row_number().over(event_order_window(*part_cols))
     older = F.count(F.lit(1)).over(older_than_window(window_s, *part_cols))
     return rn - older
 

@@ -1,34 +1,64 @@
 """Fused W1+W2 pass: SpikeDetector and StatisticalDetector share one sort.
 
-Both detectors key by (conv_id, source) and order by event time
-(/root/reference/src/anomaly/SpikeDetector.cpp:24-85 and
-StatisticalDetector.cpp:28-77 walk the same per-source deques over the same
-arrival order), so their window columns — trailing counts, range min, prefix
-mean/stddev — can be computed over ONE exchanged + sorted frame instead of
-two. At 6.9M rows the duplicate (conv_id, source) WindowExec sort was worth
-~5-8 s of the online-branch wall; at 100 TB it is a full extra shuffle+sort
-of the parsed table.
+This is the engine's only W1/W2 implementation. Both detectors key by
+(conv_id, source) and order by event time (the reference walks the same
+per-source deques over the same arrival order, main.cpp:283-360), so their
+window columns — trailing counts, range min, prefix mean/stddev — are
+computed over ONE exchanged + sorted frame. At 6.9M rows a second
+(conv_id, source) WindowExec sort was worth ~5-8 s of the online-branch
+wall; at 100 TB it is a full extra shuffle+sort of the parsed table.
+
+W1 SpikeDetector (reference src/anomaly/SpikeDetector.cpp:24-85, 158-213;
+defaults include/anomaly/SpikeDetector.hpp:143-146):
+
+- per source, trailing event-time windows of 60s (short) and 600s (baseline),
+  both including the current row; eviction strictly ``age > W``
+- currentRate = cur/60, baselineRate = base/600, ratio = currentRate/baselineRate
+- fire iff ratio > 3.0 && cur >= 5 && base >= 10
+- severity = min(1, (ratio-1)/(threshold-1)) -> with ratio > 3 this is always
+  1.0, so main.cpp:295-309 always maps it to Critical
+- rows with empty source are skipped (SpikeDetector.cpp:32-37); since
+  ``source`` is a partition key, masking the fire condition post-window is
+  the same as dropping those rows pre-window
+- rateOfChange is dead code (previousCount never written,
+  SpikeDetector.cpp:177-180) -> ROC=0.00 constant in descriptions
+- anomaly: type FrequencySpike, window [ts-60s, ts], score = ratio
+
+W2 StatisticalDetector (reference src/anomaly/StatisticalDetector.cpp:28-77,
+154-222; defaults include/anomaly/StatisticalDetector.hpp:142-150):
+
+- rate signal per source: trailing deque of timestamps within 600s (evict
+  age > 600, current row included). n < 2 -> rate = n*60/600; else
+  rate = n / max(1e-6, max(1, span_sec(first,last)) / 60) with span measured
+  first-to-current (the deque back IS the current row's ts)
+- Welford running mean/m2 over the rate sequence, UPDATED WITH the current
+  value BEFORE z is computed (StatisticalDetector.cpp:40-56); Welford over
+  the prefix is algebraically identical to ``avg``/``stddev_samp`` over
+  ``rowsBetween(unboundedPreceding, currentRow)``
+- z = (rate - mean)/stddev_samp if count >= 10 && stddev != 0, else 0
+- fire iff |z| > 3.0; severity min(1,|z|/3) -> always 1.0 -> main maps to High
+- rows with empty source are kept
+- anomaly: type StatisticalOutlier, window [ts, ts], score = z (signed)
 
 Plan shape (pinned by tests/test_plan_shapes.py): exactly one Exchange
 hashpartitioning(conv_id, source) and one Sort
 (conv_id, source, epoch, turn_idx); the rank window orders by
 (epoch, turn_idx) and the range frames by (epoch) — the single sort
-satisfies both by prefix. The description pandas UDFs run only on fired
-rows (filter first), and both anomaly variants are emitted in one pass via
-a filtered-array explode — the same one-pass trick as
+satisfies both by prefix. The description pandas UDFs (printf-style
+half-even rounding to match C++ iostreams) run only on fired rows (filter
+first), and both anomaly variants are emitted in one pass via a
+filtered-array explode — the same one-pass trick as
 pattern.pattern_anomalies, so the fused branch never consumes the frame
 twice.
-
-Semantics are the standalone detectors' exactly: spike excludes
-empty-source rows (SpikeDetector.cpp:32-37) — but since ``source`` is a
-partition key, dropping those rows pre-window or masking the fire condition
-post-window is the same thing; statistical keeps them.
 """
 
 from __future__ import annotations
 
+import pandas as pd
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.functions import pandas_udf
 
 from ...config import SpikeConfig, StatisticalConfig
 from .common import (
@@ -37,14 +67,42 @@ from .common import (
 )
 
 
+def _fmt_factory(window_s: int):
+    @pandas_udf("string")
+    def fmt(source: pd.Series, cur: pd.Series, ratio: pd.Series) -> pd.Series:
+        return pd.Series(
+            [
+                f"Spike detected: {s} ({int(c)} events in {window_s}s, "
+                f"{r:.1f}x baseline, ROC=0.00"
+                for s, c, r in zip(source, cur, ratio)
+            ],
+            index=source.index,
+        )
+
+    return fmt
+
+
+def _fmt():
+    # lazy: pandas_udf registration needs an active session (Spark 4)
+    def fmt(source: pd.Series, z: pd.Series, mean: pd.Series,
+            sd: pd.Series) -> pd.Series:
+        return pd.Series(
+            [
+                f"Statistical anomaly detected (Z={zz:.2f}): {s} event rate "
+                f"deviation {abs(zz):.2f}σ from mean μ={m:.1f} σ={d:.1f}"
+                for s, zz, m, d in zip(source, z, mean, sd)
+            ],
+            index=source.index,
+        )
+
+    return pandas_udf(fmt, "string")
+
+
 def spike_statistical_anomalies(
     parsed: DataFrame,
     spike_cfg: SpikeConfig = SpikeConfig(),
     stat_cfg: StatisticalConfig = StatisticalConfig(),
 ) -> DataFrame:
-    from .spike import _fmt_factory
-    from .statistical import _fmt
-
     keys = ("conv_id", "source")
     df = with_epoch(parsed.filter(~F.col("malformed")))
 

@@ -106,7 +106,7 @@ def rule_matches(parsed: DataFrame, rules: DataFrame) -> DataFrame:
              the reference's cleanup — reaches 5. Default registry has no
              THRESHOLD rules, so faithful mode is unchanged (zero rows).
     """
-    from .detectors.common import trailing_count_event_time, with_epoch
+    from .detectors.common import trailing_count, with_epoch
 
     rows = rules.filter("enabled").collect()
     base = parsed.filter(~F.col("malformed"))
@@ -117,7 +117,7 @@ def rule_matches(parsed: DataFrame, rules: DataFrame) -> DataFrame:
         # tiebreak): THRESHOLD is an event-time respec, so the trailing count
         # must be consistent even on non-monotonic per-conv timestamps.
         base = with_epoch(base).withColumn(
-            "_thr_n", trailing_count_event_time(THRESHOLD_WINDOW_S, "conv_id")
+            "_thr_n", trailing_count(THRESHOLD_WINDOW_S, "conv_id")
         )
         thr_pred = F.col("_thr_n") >= THRESHOLD_FREQ
     match_cols = []

@@ -19,11 +19,14 @@ from ..functions.parse_select import parse_stage_pipeline
 from ..operators.aggregates import level_stats, minute_stats, source_stats, totals
 from ..operators.detectors.burst import burst_anomalies
 from ..operators.detectors.common import S_LOW, T_OTHER, as_anomaly
-from ..operators.detectors.frequency import frequency_anomalies
-from ..operators.detectors.pattern import pattern_anomalies, unpersist_pattern_caches
+from ..operators.detectors.frequency import frequency_anomalies, frequency_stats
+from ..operators.detectors.online_fused import spike_statistical_anomalies
+from ..operators.detectors.pattern import (
+    pattern_anomalies, pattern_stats, unpersist_pattern_caches,
+)
 from ..operators.detectors.rare_ip import rare_ip_anomalies
 from ..operators.detectors.timewindow import timewindow_anomalies
-from ..operators.enrich import dims, enrich
+from ..operators.enrich import dims, enrich, rule_matches
 
 
 def parser_anomalies(parsed: DataFrame) -> DataFrame:
@@ -56,8 +59,6 @@ def rule_anomalies(parsed: DataFrame, rules: DataFrame) -> DataFrame:
     mode therefore contributes ZERO rows (F9) and this function is wired in
     only when cfg.rules_faithful is False. Severity/score come from the rule
     row; type Other; window [ts, ts]."""
-    from ..operators.enrich import rule_matches
-
     matches = rule_matches(parsed, rules)
     enriched = matches.join(F.broadcast(rules), "rule_id").join(
         parsed.select("conv_id", "turn_idx", "ts_parsed", "source"),
@@ -83,10 +84,7 @@ def online_anomalies(parsed: DataFrame, cfg: PipelineConfig = DEFAULT_CONFIG,
     """Per-entry detector fires (rule stage contributes zero rows in faithful
     mode, F9). Union order mirrors main.cpp:283-360; W1+W2 run as ONE fused
     window pass (they share the (conv_id, source) sort — see
-    detectors/online_fused.py), emitting the same rows as the standalone
-    spike_anomalies/statistical_anomalies operators."""
-    from ..operators.detectors.online_fused import spike_statistical_anomalies
-
+    detectors/online_fused.py)."""
     out = (
         parser_anomalies(parsed)
         .unionByName(spike_statistical_anomalies(parsed, cfg.spike, cfg.statistical))
@@ -219,9 +217,6 @@ def run_pipeline(
     online = online_anomalies(parsed, cfg)
     offline = offline_anomalies(parsed, cfg)
     anomalies = online.unionByName(offline)
-
-    from ..operators.detectors.frequency import frequency_stats
-    from ..operators.detectors.pattern import pattern_stats
 
     result = {
         "parsed": parsed,

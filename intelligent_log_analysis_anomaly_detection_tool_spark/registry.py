@@ -28,8 +28,7 @@ def all_operators() -> list[Op]:
     from .operators import dedup, enrich, multimodal, sessionize, similarity, textstats
     from .operators.aggregates import level_stats, minute_stats, source_stats, totals
     from .operators.detectors import (
-        burst, frequency, online_fused, pattern, rare_ip, spike, statistical,
-        timewindow,
+        burst, frequency, online_fused, pattern, rare_ip, timewindow,
     )
     from .plans import pipeline
     from . import checkpoint, dashboard, sinks
@@ -55,11 +54,8 @@ def all_operators() -> list[Op]:
         Op("sequence_counts", ("A10",), pattern.sequence_counts, "oracle"),
         Op("pattern_anomalies", ("A11",), pattern.pattern_anomalies, "oracle"),
         Op("pattern_stats", ("A9",), pattern.pattern_stats, "oracle"),
-        Op("spike_anomalies", ("W1",), spike.spike_anomalies, "duckdb+oracle"),
-        Op("statistical_anomalies", ("W2",), statistical.statistical_anomalies,
-           "duckdb+oracle"),
         Op("spike_statistical_anomalies", ("W1", "W2"),
-           online_fused.spike_statistical_anomalies, "oracle"),
+           online_fused.spike_statistical_anomalies, "duckdb+oracle"),
         Op("burst_anomalies", ("W3",), burst.burst_anomalies, "oracle"),
         Op("rare_ip_anomalies", ("W4",), rare_ip.rare_ip_anomalies,
            "duckdb+oracle"),

@@ -75,40 +75,19 @@ def test_rare_ip(parsed_df, oracle_result):
     _compare(got, want)
 
 
-def test_spike(parsed_df, oracle_result):
-    from intelligent_log_analysis_anomaly_detection_tool_spark.operators.detectors.spike import (
-        spike_anomalies,
-    )
-
-    got = spike_anomalies(parsed_df).toPandas()
-    want = _oracle_det(oracle_result, "spike")
-    assert len(want) > 0, "fixture must exercise W1"
-    _compare(got, want)
-
-
-def test_statistical(parsed_df, oracle_result):
-    from intelligent_log_analysis_anomaly_detection_tool_spark.operators.detectors.statistical import (
-        statistical_anomalies,
-    )
-
-    got = statistical_anomalies(parsed_df).toPandas()
-    want = _oracle_det(oracle_result, "statistical")
-    assert len(want) > 0, "fixture must exercise W2"
-    _compare(got, want, score_tol=1e-6)
-
-
-def test_fused_spike_statistical(parsed_df, oracle_result):
-    """The fused W1+W2 pass (one shared sort, used by online_anomalies) must
-    emit exactly the union of the standalone detectors' oracle rows."""
+@pytest.mark.parametrize("name", ["spike", "statistical"])
+def test_spike_statistical(parsed_df, oracle_result, name):
+    """W1 and W2 come from the one fused window pass (one shared sort, used
+    by online_anomalies); each detector's rows must equal its oracle rows."""
     from intelligent_log_analysis_anomaly_detection_tool_spark.operators.detectors.online_fused import (
         spike_statistical_anomalies,
     )
 
     got = spike_statistical_anomalies(parsed_df).toPandas()
-    a = oracle_result["anomalies"]
-    want = a[a["detector"].isin(["spike", "statistical"])].reset_index(drop=True)
-    assert len(want) > 0
-    _compare(got, want, score_tol=1e-6)
+    got = got[got["detector"] == name].reset_index(drop=True)
+    want = _oracle_det(oracle_result, name)
+    assert len(want) > 0, f"fixture must exercise {name}"
+    _compare(got, want, score_tol={"spike": 1e-9, "statistical": 1e-6}[name])
 
 
 def test_burst(parsed_df, oracle_result):

@@ -42,7 +42,8 @@ def _parse(spark, df):
 
 def test_trailing_window_boundary_inclusive(spark):
     """SpikeDetector evicts strictly age > W (SpikeDetector.cpp:55-60): a row
-    exactly 60s old is KEPT. Verified via the spike 'cur' count construction."""
+    exactly 60s old is KEPT. Verified via the rank-minus-evicted trailing
+    count (the same construction as the fused pass's spike 'cur')."""
     from intelligent_log_analysis_anomaly_detection_tool_spark.operators.detectors.common import (
         trailing_count,
     )
@@ -88,15 +89,15 @@ def test_zscore_warmup_no_fire_before_10(spark):
     """StatisticalDetector: z forced to 0 while count < 10
     (StatisticalDetector.cpp:204-211) — no fire possible in the first 9
     observations per (conv, source) no matter how extreme the rate."""
-    from intelligent_log_analysis_anomaly_detection_tool_spark.operators.detectors.statistical import (
-        statistical_anomalies,
+    from intelligent_log_analysis_anomaly_detection_tool_spark.operators.detectors.online_fused import (
+        spike_statistical_anomalies,
     )
 
     # 9 observations with wildly varying gaps
     offs = [0, 600, 601, 602, 603, 604, 605, 606, 607]
     df = _conv(spark, [(o, _line(T0 + dt.timedelta(seconds=o))) for o in offs])
-    got = statistical_anomalies(_parse(spark, df)).toPandas()
-    assert len(got) == 0
+    got = spike_statistical_anomalies(_parse(spark, df)).toPandas()
+    assert (got["detector"] != "statistical").all()
 
 
 def test_message_20_char_boundary(spark):

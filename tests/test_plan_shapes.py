@@ -128,7 +128,7 @@ def test_pattern_kernel_reads_cached_base_in_place(spark, fixture_pdf):
 
 def test_parse_evaluated_once_in_spike(spark, fixture_pdf):
     """The parse stage is one mapInArrow node, a barrier Catalyst does not
-    split or push consumers through, so the spike detector's several reads
+    split or push consumers through, so the W1+W2 pass's several reads
     of the parsed columns share a single evaluation: exactly one MapInArrow
     in the plan. Uses a FRESH uncached input so the cache manager cannot
     substitute persisted subtrees from other tests (their plan descriptions
@@ -136,17 +136,15 @@ def test_parse_evaluated_once_in_spike(spark, fixture_pdf):
     from intelligent_log_analysis_anomaly_detection_tool_spark.functions.parse_select import (
         parse_stage,
     )
-    from intelligent_log_analysis_anomaly_detection_tool_spark.operators.detectors.spike import (
-        spike_anomalies,
+    from intelligent_log_analysis_anomaly_detection_tool_spark.operators.detectors.online_fused import (
+        spike_statistical_anomalies,
     )
     from intelligent_log_analysis_anomaly_detection_tool_spark.schema import (
         TRANSCRIPTS_SCHEMA,
     )
 
     fresh = spark.createDataFrame(fixture_pdf.head(500), schema=TRANSCRIPTS_SCHEMA)
-    p = _plan(spike_anomalies(parse_stage(fresh)))
+    p = _plan(spike_statistical_anomalies(parse_stage(fresh)))
     if "InMemoryRelation" in p:  # another test cached an identical subtree
         return
     assert p.count("MapInArrow") == 1, p
-    # merged window sorts: one rn sort + one epoch sort
-    assert p.count("+- Sort") <= 3

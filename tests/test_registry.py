@@ -38,3 +38,21 @@ def test_registry_required_kwargs_have_no_default():
             assert p.default is inspect.Parameter.empty, (o.name, kw)
         for kw in o.tunable_kwargs:
             assert kw in sig.parameters, (o.name, kw)
+
+
+def test_each_detector_id_has_one_operator():
+    """Every W* detector id is implemented by exactly one operator, so a
+    second path for a detector (and a second place for its semantic fixes)
+    cannot come back unnoticed."""
+    from collections import Counter
+
+    from intelligent_log_analysis_anomaly_detection_tool_spark.registry import (
+        all_operators,
+    )
+
+    owners = Counter(
+        sid for o in all_operators() for sid in o.survey_ids
+        if sid.startswith("W")
+    )
+    assert owners, "registry lists no W* detector"
+    assert {sid: n for sid, n in owners.items() if n != 1} == {}, owners
