@@ -900,8 +900,7 @@ def q_simhash64_pairs(spark, sf_dir):
     DuckDB-PAIRED since round 5 via the portable md5-bit construction
     (dedup.simhash64_md5) — the oracle rebuilds the same 64-bit fingerprints
     and runs an all-pairs xor/bit_count scan, so blocking + Hamming filter
-    are checked end-to-end at full width. The xxhash64 production
-    construction (dedup.simhash64) stays pytest-verified."""
+    are checked end-to-end at full width."""
     _utc(spark)
     from intelligent_log_analysis_anomaly_detection_tool_spark.operators.dedup import (
         hamming_near_dup_pairs,

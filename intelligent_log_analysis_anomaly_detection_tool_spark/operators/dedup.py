@@ -21,14 +21,20 @@ Scale notes:
   over the exploded shingle set), then band-hash equi-join for candidate
   pairs — the join is on band hash, never on raw text, so shuffle width is
   O(docs x bands), not O(text)
-- n-gram jaccard joins only docs sharing at least one shingle (explode +
-  equi-join on shingle), never the full cross product
+- exact n-gram jaccard has two plans (choose_jaccard_plan): a blocked
+  bitset matmul over block pairs for narrow shingle vocabularies, where
+  nearly every doc pair shares a shingle anyway, and a prefix-filtered
+  equi-join on shingle hashes otherwise, which joins only docs sharing a
+  rare-end shingle
 """
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from .similarity import block_pairs_apply
 
 
 def ws_tokens(col: Column) -> Column:
@@ -40,14 +46,13 @@ def word_shingle_hashes(col: Column, n: int = 3) -> Column:
     """Distinct n-word shingle HASHES of a text column (array<long>).
 
     For operators that only need shingle identity, never the shingle
-    string (jaccard, count-joins): hash each token once with
+    string (jaccard): hash each token once with
     xxhash64, then combine adjacent token hashes with chained
     zip_with(xxhash64) — no per-shingle string building, measured ~7x faster
     than slice+array_join on the synthetic corpus. Collision risk is the
-    usual 64-bit-hash story (~2^-64 per pair) — accepted, same caveat as the
-    count-join's xxhash64 keys. The <n-token fallback (whole doc as one
-    shingle) folds all token hashes so it can never collide with a true
-    n-gram of a different length."""
+    usual 64-bit-hash story (~2^-64 per pair) — accepted. The <n-token
+    fallback (whole doc as one shingle) folds all token hashes so it can
+    never collide with a true n-gram of a different length."""
     toks = ws_tokens(col)
     th = F.transform(toks, lambda t: F.xxhash64(t))
     sz = F.size(toks)
@@ -197,102 +202,98 @@ def lsh_candidate_pairs(docs: DataFrame, text_col: str = "text",
     return pairs.distinct()
 
 
-def choose_jaccard_plan(n_vocab: int, n_docs: int, count_join_rows: int,
-                        dense_vocab_max: int = 65536,
-                        dense_block_rows_cap: int = 4096,
-                        dense_max_blocks: int = 32,
-                        count_join_budget: int = 50_000_000):
+# dense jaccard sizing: a bitset-able vocabulary, block rows capped so a
+# block's float32 matrix stays <= ~64 MB, and the block count at which a
+# corpus stops fitting the dense plan (unless its sharing is near-all-pairs)
+_DENSE_VOCAB_MAX = 65536
+_DENSE_BLOCK_ROWS_CAP = 4096
+_DENSE_MAX_BLOCKS = 32
+
+
+def choose_jaccard_plan(n_vocab: int, n_docs: int, pair_rows: int,
+                        max_df: int):
     """Pick the physical strategy for exact jaccard from measured corpus
     stats. Pure function (unit-testable). Returns (plan, n_blocks).
 
+    ``pair_rows`` is the sum over shingles of df*(df-1)/2 and ``max_df`` the
+    largest df, both from the one stats pass of ngram_jaccard_pairs.
+
     - ``dense``: blocked-bitset matmul (chunked kernel, r6: a block-pair
       task holds two <= ~64 MB float32 block matrices plus a fixed-size
-      chunk buffer — the old full |A|x|B| intersection/union output
-      matrices, the r2 advisor's OOM shape, no longer exist). Chosen when
-      the vocabulary fits a bitset and the corpus fits <= dense_max_blocks
-      blocks — or, at ANY corpus size, when the vocabulary is TRULY narrow
-      (<= 4096) and pair sharing is provably near-all-pairs
-      (count_join_rows > n_docs^2/8): on that shape the prefix filter's
-      candidate join also degenerates to ~all-pairs but pays for each pair
-      through a shuffle+distinct, ~100x the matmul's per-pair cost, while
-      per-task memory here stays <= 2 x 4096 x 4096 x 4B. The near-all-
-      pairs test matters: a mid-size vocabulary merely 20% over the join
-      budget (count_join_rows << n_docs^2) must still fall through to
-      prefix, whose candidates are bounded by actual sharing.
-    - ``count_join``: shared-shingle pair counting. ``count_join_rows`` is
-      the EXACT number of pair rows the join materializes before the groupBy
-      (sum over shingles of df*(df-1)/2); chosen only under budget.
-    - ``prefix``: Bayardo/Chaudhuri prefix filtering — the lossless
-      fallback when a hot shingle would make the count-join quadratic
-      (one shingle in 50% of docs => ~n_docs^2/8 join rows) while overall
-      sharing stays sparse (the hot shingle sorts into suffixes and never
-      generates candidates)."""
+      chunk buffer). Chosen when the vocabulary fits a bitset and the corpus
+      fits <= _DENSE_MAX_BLOCKS blocks — or, at ANY corpus size, when the
+      vocabulary is TRULY narrow (<= 4096) and pair sharing is near-all-pairs
+      (pair_rows > n_docs^2/8 without the hottest shingle): on that shape the
+      prefix filter's candidate join also degenerates to ~all-pairs but pays
+      for each pair through a shuffle+distinct, ~100x the matmul's per-pair
+      cost, while per-task memory here stays <= 2 x 4096 x 4096 x 4B. The
+      hottest shingle's df*(df-1)/2 is left out because pair_rows counts a
+      pair once per shingle it shares: one shingle in half the docs alone
+      gives ~n_docs^2/8 on a corpus whose other shingles are sparse, and
+      there the dense plan's O(n_blocks^2) groups are pure waste.
+    - ``prefix``: Bayardo/Chaudhuri prefix filtering — the lossless plan for
+      every other shape (wide vocabulary, or sparse sharing past the dense
+      block count): a hot shingle sorts into the suffixes and never
+      generates candidates."""
     block_rows = max(512, min((64 << 20) // (max(n_vocab, 1) * 4),
-                              dense_block_rows_cap))
+                              _DENSE_BLOCK_ROWS_CAP))
     n_blocks = max(-(-n_docs // block_rows), min(8, max(1, n_docs // 64)))
-    dense_fits = n_vocab < dense_vocab_max and n_blocks <= dense_max_blocks
+    dense_fits = n_vocab < _DENSE_VOCAB_MAX and n_blocks <= _DENSE_MAX_BLOCKS
     all_pairs_anyway = (
-        n_vocab <= 4096 and count_join_rows > n_docs * n_docs // 8
+        n_vocab <= 4096
+        and pair_rows - max_df * (max_df - 1) // 2 > n_docs * n_docs // 8
     )
-    if dense_fits or (all_pairs_anyway and count_join_rows > count_join_budget):
-        return "dense", n_blocks
-    if count_join_rows <= count_join_budget:
-        return "count_join", n_blocks
-    return "prefix", n_blocks
+    return ("dense" if dense_fits or all_pairs_anyway else "prefix"), n_blocks
 
 
 def ngram_jaccard_pairs(docs: DataFrame, text_col: str = "text",
                         id_col: str = "doc_id", shingle_n: int = 2,
                         threshold: float = 0.2,
-                        plan: str = "auto",
-                        dense_vocab_max: int = 65536,
-                        count_join_budget: int = 50_000_000,
-                        eager: bool = True) -> DataFrame:
+                        plan: str = "auto") -> DataFrame:
     """Exact n-gram Jaccard pairs with jaccard >= threshold.
 
-    Adaptive physical strategy (identical output on every path; see
-    choose_jaccard_plan for the decision rule and tests/test_dataops.py for
-    the three-way output-equality check):
+    Two physical strategies with identical output (choose_jaccard_plan has
+    the decision rule; tests/test_dataops.py checks both against a
+    brute-force reference):
 
-    - ``dense`` (small vocabulary): every doc-pair shares shingles and
+    - ``dense`` (narrow vocabulary): every doc-pair shares shingles and
       candidate joins degenerate to all-pairs, so use the blocked-bitset
       plan — docs hashed into B blocks, block-pairs cogrouped, intersections
       computed as one vectorized numpy bool-matmul per block-pair (no driver
       collect; each task holds two bounded blocks).
-    - ``count_join`` (sparse vocabulary, no hot shingles): join docs sharing
-      a shingle on 64-bit hash keys, count shared shingles per pair. Exact
-      cost is known up front: sum over shingles of df*(df-1)/2 pair rows.
-    - ``prefix`` (sparse + hot shingles): PREFIX FILTERING (Chaudhuri/Ganti/
+    - ``prefix`` (everything else): PREFIX FILTERING (Chaudhuri/Ganti/
       Kaushik ICDE'06, Bayardo/Ma/Srikant WWW'07) on shingle HASHES — under
       a global rare-first order, J(A,B) >= t implies the first
       |X| - ceil(t*|X|) + 1 shingles of each side share one, so the candidate
       join never touches the hottest shingles (they sort to the suffix);
       candidates are verified exactly via array_intersect. Lossless, unlike
-      a df-cap, and immune to the one-shingle-in-half-the-corpus blowup:
-      count_join would materialize ~n^2/8 rows there, prefix ~0.
+      a df-cap, and immune to the one-shingle-in-half-the-corpus blowup of a
+      plain join on shared shingles (~n^2/8 rows there, prefix ~0).
 
-    ``plan`` forces a specific path (tests); ``eager=True`` materializes the
-    result via localCheckpoint and unpersists the shared shingle cache so
-    repeated calls don't accumulate cached blocks for the session (r2
-    advisor finding)."""
-    from pyspark import StorageLevel
-
-    # materialize the PER-DOC shingle-hash ARRAYS once (r6): the shingle
-    # expression is the dominant per-pass cost; an eager checkpoint of the
-    # narrow (id, array<long>) frame makes every downstream pass (stats
-    # explode, dense kernel, count-join/prefix explode) read hashes instead
-    # of re-tokenizing text. Strictly smaller than the round-5 persisted
-    # exploded stream (one row per doc, no duplicated id column), and the
-    # dense path now consumes the arrays DIRECTLY — no explode at all.
+    ``plan`` forces ``"dense"`` or ``"prefix"`` (tests). The result is
+    materialized by an eager localCheckpoint, after which the shingle caches
+    it was built from are unpersisted, so repeated calls leave no cached
+    blocks behind (r2 advisor finding)."""
+    if plan not in ("auto", "dense", "prefix"):
+        raise ValueError(f"unknown jaccard plan: {plan!r}")
+    # cache the PER-DOC shingle-hash ARRAYS once (r6): the shingle
+    # expression is the dominant per-pass cost, so every downstream pass
+    # (stats explode, dense kernel, prefix explode) reads hashes instead of
+    # re-tokenizing text. One row per doc, and the dense path consumes the
+    # arrays DIRECTLY — no explode at all. The stats collect below fills it.
     arr = docs.select(
         F.col(id_col),
         word_shingle_hashes(F.col(text_col), shingle_n).alias("shh_arr"),
-    ).localCheckpoint(eager=True)
-    ex = arr.select(F.col(id_col), F.explode("shh_arr").alias("shh"))
+    ).persist(StorageLevel.MEMORY_AND_DISK)
+    # a NULL text shingles to [NULL]: compacted, it adds no vocabulary, pair
+    # rows or max_df (six NULL texts would otherwise be the "hottest shingle")
+    ex = arr.select(F.col(id_col),
+                    F.explode(F.array_compact("shh_arr")).alias("shh"))
     freq = ex.groupBy("shh").agg(F.count(F.lit(1)).alias("df"))
     st = freq.agg(
         F.count(F.lit(1)).alias("v"),
         F.sum(F.col("df") * (F.col("df") - 1) / 2).alias("pair_rows"),
+        F.max("df").alias("max_df"),
     ).collect()[0]
     n_vocab, pair_rows = st["v"], int(st["pair_rows"] or 0)
     # every doc yields >= 1 shingle (word_shingle_hashes' <n-token fallback),
@@ -301,35 +302,22 @@ def ngram_jaccard_pairs(docs: DataFrame, text_col: str = "text",
     n_docs = docs.count()
     id_type = docs.schema[id_col].dataType.simpleString()
 
-    if plan == "auto":
-        plan, n_blocks = choose_jaccard_plan(
-            n_vocab, n_docs, pair_rows, dense_vocab_max,
-            count_join_budget=count_join_budget,
-        )
-    else:
-        _, n_blocks = choose_jaccard_plan(n_vocab, n_docs, pair_rows,
-                                          dense_vocab_max)
-
+    chosen, n_blocks = choose_jaccard_plan(n_vocab, n_docs, pair_rows,
+                                           int(st["max_df"] or 0))
     sh = None
-    if plan == "dense":
+    if (chosen if plan == "auto" else plan) == "dense":
         out = _jaccard_blocked_bitset(arr, id_col, threshold, n_blocks,
                                       id_type)
-    elif plan == "count_join":
-        sh = ex.persist(StorageLevel.MEMORY_AND_DISK)
-        out = _jaccard_count_join(sh, id_col, threshold)
-    elif plan == "prefix":
+    else:
         sh = ex.persist(StorageLevel.MEMORY_AND_DISK)
         out = _jaccard_prefix_hash(sh, freq, id_col, threshold)
-    else:
-        raise ValueError(f"unknown jaccard plan: {plan!r}")
 
-    if eager:
-        # pin the (small) result, then drop the shingle cache — without
-        # this the MEMORY_AND_DISK blocks live until the driver GCs the plan
-        # (the arr checkpoint RDD is freed when the plan objects are GC'd)
-        out = out.localCheckpoint(eager=True)
-        if sh is not None:
-            sh.unpersist(blocking=False)
+    # pin the (small) result, then drop the caches it was built from —
+    # without this their MEMORY_AND_DISK blocks live on in the session
+    out = out.localCheckpoint(eager=True)
+    arr.unpersist(blocking=False)
+    if sh is not None:
+        sh.unpersist(blocking=False)
     return out
 
 
@@ -389,18 +377,19 @@ def _jaccard_blocked_bitset(arr: DataFrame, id_col: str,
     """Exact all-pairs Jaccard for DENSE vocabularies via blocked bitsets.
 
     When the distinct-shingle vocabulary is small, "pairs sharing a shingle"
-    is near-all-pairs and the count-join materializes O(sum df^2) rows (36.5M
-    at sf0.1 for 260 result rows). Here instead: hash docs into B blocks and
-    cogroup the B(B+1)/2 block-pairs; each task computes the inter-block
+    is near-all-pairs and a join on shared shingles materializes
+    O(sum df^2) rows (36.5M at sf0.1 for 260 result rows). Here instead: hash
+    docs into B blocks and cogroup the B(B+1)/2 block-pairs
+    (similarity.block_pairs_apply); each task computes the inter-block
     intersection counts as chunked numpy bool matmuls (BLAS, float32 — exact
     for counts < 2^24). No driver collect: each task holds exactly two
     blocks. B is sized so a block's dense matrix stays ~64 MB.
 
     The kernel emits (pair, inter, sz_a, sz_b) with a loose raw-jaccard
     prefilter; the final rounded-jaccard filter runs Spark-side so boundary
-    rounding is bit-identical to the count-join / oracle path.
+    rounding is bit-identical to the prefix / oracle path.
 
-    ``arr`` is the checkpointed per-doc shingle-hash ARRAY frame built by
+    ``arr`` is the cached per-doc shingle-hash ARRAY frame built by
     ngram_jaccard_pairs. Round-6 restructure (measured at 50k docs / 961
     vocab, stage 22-36 s -> ~2 s):
 
@@ -418,25 +407,11 @@ def _jaccard_blocked_bitset(arr: DataFrame, id_col: str,
       inter values are recomputed for the few surviving pairs via einsum.
     """
     # a NULL text shingles to [NULL]: its NULL elements go and the emptied
-    # array with them, as the count-join and prefix plans never match NULL
-    # shingles (left in, every two NULL docs would pair at jaccard 1.0)
+    # array with them, as the prefix plan never matches NULL shingles (left
+    # in, every two NULL docs would pair at jaccard 1.0)
     ids = (
         arr.withColumn("shh_arr", F.array_compact("shh_arr"))
         .filter(F.size("shh_arr") > 0)
-        .withColumn(
-            "blk", F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_blocks)).cast("int")
-        )
-    )
-    # one side-tagged union instead of a self-cogroup (avoids Spark's
-    # ambiguous-self-join analysis); the kernel splits by side
-    left = ids.withColumn(
-        "bj", F.explode(F.sequence(F.col("blk"), F.lit(n_blocks - 1)))
-    ).withColumnRenamed("blk", "bi").withColumn("side", F.lit(0))
-    right = ids.withColumn(
-        "bi", F.explode(F.sequence(F.lit(0), F.col("blk")))
-    ).withColumnRenamed("blk", "bj").withColumn("side", F.lit(1))
-    both = left.select(id_col, "shh_arr", "bi", "bj", "side").unionByName(
-        right.select(id_col, "shh_arr", "bi", "bj", "side")
     )
 
     out_schema = (
@@ -550,46 +525,14 @@ def _jaccard_blocked_bitset(arr: DataFrame, id_col: str,
              "inter": I[0], "sz_a": I[1], "sz_b": I[2]}
         )
 
-    cg = both.groupBy("bi", "bj").applyInArrow(_block_pair, schema=out_schema)
+    cg = block_pairs_apply(ids, id_col, "shh_arr", n_blocks, _block_pair,
+                           out_schema)
     return (
         cg.withColumn(
             "jaccard",
             F.round(
                 F.col("inter") / (F.col("sz_a") + F.col("sz_b") - F.col("inter")), 4
             ),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", "inter", "jaccard")
-    )
-
-
-def _jaccard_count_join(sh_stream: DataFrame, id_col: str,
-                        threshold: float) -> DataFrame:
-    """Exact sparse-vocabulary path: join on xxhash64(shingle) (64-bit keys in
-    the exchange instead of strings), count shared shingles per pair, then the
-    jaccard filter. Hash collisions would inflate an intersection count; at
-    ~10^6 distinct shingles the odds are ~1e-7 — accepted.
-
-    ``sh_stream`` is the persisted exploded (id, shingle-hash) stream built by
-    ngram_jaccard_pairs."""
-    sh = sh_stream.select(F.col(id_col), F.col("shh"))
-    sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("sz"))
-    a, b = sh.alias("a"), sh.alias("b")
-    inter = (
-        a.join(b, (F.col("a.shh") == F.col("b.shh"))
-               & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")))
-        .groupBy(F.col(f"a.{id_col}").alias("doc_a"),
-                 F.col(f"b.{id_col}").alias("doc_b"))
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
-    sz_a = sizes.select(F.col(id_col).alias("doc_a"), F.col("sz").alias("sz_a"))
-    sz_b = sizes.select(F.col(id_col).alias("doc_b"), F.col("sz").alias("sz_b"))
-    return (
-        inter.join(F.broadcast(sz_a), "doc_a")
-        .join(F.broadcast(sz_b), "doc_b")
-        .withColumn(
-            "jaccard",
-            F.round(F.col("inter") / (F.col("sz_a") + F.col("sz_b") - F.col("inter")), 4),
         )
         .filter(F.col("jaccard") >= threshold)
         .select("doc_a", "doc_b", "inter", "jaccard")
@@ -617,7 +560,7 @@ def simhash16(docs: DataFrame, text_col: str = "text",
     fingerprint bit j is set iff sum over tokens of (2*bit_j - 1) > 0.
     Tokens count with multiplicity. The 16-bit md5-nibble width keeps the
     construction expressible in BOTH Spark and DuckDB SQL for the oracle
-    check; the production-width variant is simhash64 (xxhash64, Spark-only).
+    check; the 64-bit variant is simhash64_md5.
 
     Physical form (r6, output-identical, ~1.8x): nibbles come from two
     conv(hex,16,10) halves instead of 16 substr+instr probes, and the
@@ -646,32 +589,6 @@ def simhash16(docs: DataFrame, text_col: str = "text",
     return g.select(F.col(id_col), fp.cast("long").alias("simhash"))
 
 
-def simhash64(docs: DataFrame, text_col: str = "text",
-              id_col: str = "doc_id") -> DataFrame:
-    """64-bit SimHash (production variant): per-token xxhash64 bit-majority.
-    Spark-only (xxhash64 is engine-native); verified against a python
-    reference implementation in pytest rather than DuckDB."""
-    toks = docs.select(
-        F.col(id_col), F.explode(ws_tokens(F.col(text_col))).alias("tok")
-    ).withColumn("h", F.xxhash64(F.col("tok")))
-    aggs = [
-        F.sum(
-            F.when(
-                F.shiftright(F.col("h"), j).bitwiseAND(F.lit(1)) == 1, F.lit(1)
-            ).otherwise(F.lit(-1))
-        ).alias(f"b{j}")
-        for j in range(64)
-    ]
-    g = toks.groupBy(id_col).agg(*aggs)
-    fp = None
-    for j in range(64):
-        term = F.when(
-            F.col(f"b{j}") > 0, F.shiftleft(F.lit(1).cast("long"), j)
-        ).otherwise(F.lit(0).cast("long"))
-        fp = term if fp is None else fp + term
-    return g.select(F.col(id_col), fp.alias("simhash"))
-
-
 def simhash64_md5(docs: DataFrame, text_col: str = "text",
                   id_col: str = "doc_id") -> DataFrame:
     """64-bit SimHash with the PORTABLE construction (round 5):
@@ -681,8 +598,7 @@ def simhash64_md5(docs: DataFrame, text_col: str = "text",
     (fingerprint + selective 16-bit blocks + Hamming filter) can be
     oracle-paired end-to-end. Bit 63 is assembled from the min-long literal
     (a 1<<63 shift overflows signed 64-bit in both engines); disjoint bit
-    terms are summed, so no partial sum can overflow. The xxhash64 variant
-    (``simhash64``) stays the fastest production construction.
+    terms are summed, so no partial sum can overflow.
 
     Physical form (r6, output-identical, ~1.5x): same conv-halves nibble
     extraction and 2*sum(bit) > count majority test as simhash16."""
@@ -728,12 +644,23 @@ def _hamming_masks(fp_bits: int, max_hamming: int) -> list[int]:
     return masks
 
 
+# hard bound on the rows of one _cross_pairs_kernel output batch: one
+# skewed value pair (two fingerprints shared by thousands of docs each)
+# would otherwise make a single multi-GB Arrow batch
+_CROSS_BATCH_ROWS = 1 << 20
+
+
 def _cross_pairs_kernel(batches):
     """mapInArrow kernel for the dense Hamming path: per (ids_a, ids_b,
     hamming) row emit the full id cross product as (min, max, hamming).
-    Vectorized per row with numpy repeat/tile; the Python loop runs once per
-    VALUE pair (|V|-bounded), never per output row. Measured 5.4x faster than
-    the equivalent chained-Generate SQL explode (guide 4.2)."""
+
+    Output row ``k`` of input row ``i`` is ``(ids_a[i][k // len(ids_b[i]),
+    ids_b[i][k % len(ids_b[i])])`` — ``repeat(ids_a) x tile(ids_b)`` order.
+    Every output batch covers one slice of at most _CROSS_BATCH_ROWS of the
+    concatenated cross products and is built fully vectorized from the list
+    offsets (no Python loop per value pair), so a slice may end inside one
+    huge cross product and start the next batch there. Measured 5.4x faster
+    than the equivalent chained-Generate SQL explode (guide 4.2)."""
     import numpy as np
     import pyarrow as pa
 
@@ -747,32 +674,32 @@ def _cross_pairs_kernel(batches):
         if isinstance(ib_col, pa.ChunkedArray):
             ib_col = ib_col.combine_chunks()
         ham = b.column("hamming").to_numpy(zero_copy_only=False)
-        # preallocate the full output once (sizes known from the list
-        # offsets): the output stream is huge (230M rows at 50k docs), and
-        # per-row arrays + a concatenate pass doubled the allocation churn —
-        # kernel-time (page-fault) share was the top cost in /proc/stat
-        # annotations of this query
-        la_all = np.diff(ia_col.offsets.to_numpy(zero_copy_only=False))
-        lb_all = np.diff(ib_col.offsets.to_numpy(zero_copy_only=False))
-        sizes = la_all * lb_all
-        total = int(sizes.sum())
-        id_dt = ia_col.values.to_numpy(zero_copy_only=False).dtype
-        A = np.empty(total, dtype=id_dt)
-        B = np.empty(total, dtype=id_dt)
-        H = np.repeat(ham.astype(np.int32), sizes)
-        pos = 0
-        for i in range(b.num_rows):
-            a = np.asarray(ia_col[i].values)
-            bb = np.asarray(ib_col[i].values)
-            n = int(sizes[i])
-            A[pos:pos + n] = np.repeat(a, len(bb))
-            B[pos:pos + n] = np.tile(bb, len(a))
-            pos += n
-        yield pa.record_batch(
-            [pa.array(np.minimum(A, B)), pa.array(np.maximum(A, B)),
-             pa.array(H)],
-            names=["doc_a", "doc_b", "hamming"],
-        )
+        ham = ham.astype(np.int32)
+        # list offsets index .values directly (also for a sliced array)
+        ia_off = ia_col.offsets.to_numpy(zero_copy_only=False).astype(np.int64)
+        ib_off = ib_col.offsets.to_numpy(zero_copy_only=False).astype(np.int64)
+        ia_vals = ia_col.values.to_numpy(zero_copy_only=False)
+        ib_vals = ib_col.values.to_numpy(zero_copy_only=False)
+        lb_all = np.diff(ib_off)
+        sizes = np.diff(ia_off) * lb_all
+        ends = np.cumsum(sizes)
+        starts = ends - sizes
+        total = int(ends[-1])
+        for s in range(0, total, _CROSS_BATCH_ROWS):
+            e = min(s + _CROSS_BATCH_ROWS, total)
+            # the input rows overlapping [s, e) and the rows each adds
+            i0 = int(np.searchsorted(ends, s, side="right"))
+            i1 = int(np.searchsorted(starts, e, side="left"))
+            cnt = np.minimum(ends[i0:i1], e) - np.maximum(starts[i0:i1], s)
+            r = np.repeat(np.arange(i0, i1), cnt)
+            ka, kb = np.divmod(np.arange(s, e) - starts[r], lb_all[r])
+            A = ia_vals[ia_off[r] + ka]
+            B = ib_vals[ib_off[r] + kb]
+            yield pa.record_batch(
+                [pa.array(np.minimum(A, B)), pa.array(np.maximum(A, B)),
+                 pa.array(ham[r])],
+                names=["doc_a", "doc_b", "hamming"],
+            )
 
 
 def _hamming_dense_value_space(sim: DataFrame, id_col: str, max_hamming: int,
@@ -877,7 +804,7 @@ def hamming_near_dup_pairs(sim: DataFrame, id_col: str = "doc_id",
     row-identical on both paths (pinned by tests/test_dataops.py).
 
     ``fp_bits`` is REQUIRED (no default) and must match the fingerprint width
-    of ``sim`` (64 for simhash64, 16 for the oracle-checkable simhash16): a
+    of ``sim`` (64 for simhash64_md5, 16 for simhash16): a
     width larger than the data would extract all-zero high blocks, on which
     every document agrees — silently degenerating the candidate join to
     ~all-pairs (correct output after the bit_count filter, quadratic cost).
@@ -900,7 +827,7 @@ def hamming_near_dup_pairs(sim: DataFrame, id_col: str = "doc_id",
     width = fp_bits // nblocks
     # both sides of the block self-join read `sim`; without materialization
     # the fingerprint aggregation subtree (64 sum-aggs over the exploded
-    # token stream for simhash64) is computed TWICE in the plan (r6)
+    # token stream for simhash64_md5) is computed TWICE in the plan (r6)
     sim = sim.localCheckpoint(eager=True)
     blocks = sim.select(
         F.col(id_col),

@@ -40,6 +40,33 @@ def cosine_similarity(a: Column, b: Column) -> Column:
     return _dot(a, b) / (_norm(a) * _norm(b))
 
 
+def block_pairs_apply(df: DataFrame, id_col: str, payload_col: str,
+                      n_blocks: int, kernel, schema: str) -> DataFrame:
+    """Blocked all-pairs layout shared by the exact cosine and dense jaccard
+    kernels: rows are hashed into ``n_blocks`` blocks by
+    ``pmod(xxhash64(id), n_blocks)`` and every block pair ``bi <= bj`` is one
+    ``groupBy("bi", "bj").applyInArrow(kernel)`` group, so each task holds
+    exactly two blocks and no driver collect is needed.
+
+    A row of block ``blk`` enters groups ``(blk, blk..B-1)`` as side 0 and
+    ``(0..blk, blk)`` as side 1, in one side-tagged union instead of a
+    self-cogroup (avoids Spark's ambiguous-self-join analysis). The kernel
+    receives (id_col, payload_col, bi, bj, side) and splits by side; on the
+    diagonal group (``key[0] == key[1]``) both sides hold the same rows."""
+    base = df.withColumn(
+        "blk", F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_blocks)).cast("int")
+    )
+    left = base.withColumn(
+        "bj", F.explode(F.sequence(F.col("blk"), F.lit(n_blocks - 1)))
+    ).withColumnRenamed("blk", "bi").withColumn("side", F.lit(0))
+    right = base.withColumn(
+        "bi", F.explode(F.sequence(F.lit(0), F.col("blk")))
+    ).withColumnRenamed("blk", "bj").withColumn("side", F.lit(1))
+    cols = [id_col, payload_col, "bi", "bj", "side"]
+    both = left.select(*cols).unionByName(right.select(*cols))
+    return both.groupBy("bi", "bj").applyInArrow(kernel, schema=schema)
+
+
 def cosine_topk(emb: DataFrame, query_vec_id: int, k: int = 10,
                 id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
     """Exact brute-force cosine top-k against the vector with ``query_vec_id``."""
@@ -69,10 +96,10 @@ def cosine_near_dup_pairs(emb: DataFrame, threshold: float = 0.9,
 
     ``n_centroids=None``: exact brute baseline as BLOCKED ALL-PAIRS MATRIX
     MULTIPLY — vectors are hashed into B blocks, the B(B+1)/2 block-pairs are
-    cogrouped, and each task computes one normalized block x block matmul
-    (BLAS) inside applyInPandas. NO driver-side materialization: each task
-    holds exactly two blocks, so the exact path survives inputs far past
-    driver memory (it is still O(N^2) compute — that's what "exact all-pairs"
+    cogrouped (block_pairs_apply), and each task computes one normalized
+    block x block matmul (BLAS) inside applyInArrow. NO driver-side
+    materialization: each task holds exactly two blocks, so the exact path
+    survives inputs far past driver memory (it is still O(N^2) compute — that's what "exact all-pairs"
     means; at corpus scale use ``n_centroids``). With ``n_centroids``:
     IVF-bucketed variant — only pairs inside the same coarse cell are
     compared (the scale path; recall < 1 by design, like every ANN dedup).
@@ -106,20 +133,6 @@ def cosine_near_dup_pairs(emb: DataFrame, threshold: float = 0.9,
     # ~2048-row blocks: a block is 2048 x dim doubles (1 MB at dim=64); at
     # least 8 blocks so the 36+ block-pair tasks parallelize
     n_blocks = max(8, -(-n_docs // 2048))
-    base = emb.select(F.col(id_col), F.col(vec_col)).withColumn(
-        "blk", F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_blocks)).cast("int")
-    )
-    # side-tagged union instead of a self-cogroup (avoids Spark's
-    # ambiguous-self-join analysis); the kernel splits by side
-    left = base.withColumn(
-        "bj", F.explode(F.sequence(F.col("blk"), F.lit(n_blocks - 1)))
-    ).withColumnRenamed("blk", "bi").withColumn("side", F.lit(0))
-    right = base.withColumn(
-        "bi", F.explode(F.sequence(F.lit(0), F.col("blk")))
-    ).withColumnRenamed("blk", "bj").withColumn("side", F.lit(1))
-    both = left.select(id_col, vec_col, "bi", "bj", "side").unionByName(
-        right.select(id_col, vec_col, "bi", "bj", "side")
-    )
     # the kernel prefilters on a slightly loose raw cosine; the exact
     # rounded-cosine filter runs Spark-side (F.round, matching the IVF path
     # and the DuckDB oracle's round semantics)
@@ -198,8 +211,9 @@ def cosine_near_dup_pairs(emb: DataFrame, threshold: float = 0.9,
             )
         return pa.table(empty)
 
-    pairs = both.groupBy("bi", "bj").applyInArrow(
-        _block_pair, schema="vec_a long, vec_b long, cosine_raw double"
+    pairs = block_pairs_apply(
+        emb.select(F.col(id_col), F.col(vec_col)), id_col, vec_col, n_blocks,
+        _block_pair, "vec_a long, vec_b long, cosine_raw double",
     )
     return (
         pairs.withColumn("cosine", F.round(F.col("cosine_raw"), 4))

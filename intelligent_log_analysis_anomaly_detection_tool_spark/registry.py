@@ -82,7 +82,6 @@ def all_operators() -> list[Op]:
         Op("lsh_candidate_pairs", ("dedup",), dedup.lsh_candidate_pairs, "duckdb"),
         Op("ngram_jaccard_pairs", ("dedup",), dedup.ngram_jaccard_pairs, "duckdb"),
         Op("simhash16", ("dedup",), dedup.simhash16, "duckdb+pytest"),
-        Op("simhash64", ("dedup",), dedup.simhash64, "pytest"),
         Op("simhash64_md5", ("dedup",), dedup.simhash64_md5, "duckdb"),
         Op("hamming_near_dup_pairs", ("dedup",), dedup.hamming_near_dup_pairs,
            "duckdb+pytest", required_kwargs=("fp_bits",)),

@@ -1,6 +1,9 @@
 """Training-data pipeline operators: dedup, similarity, multimodal plumbing."""
 
 import hashlib
+import random
+import re
+from decimal import ROUND_HALF_UP, Decimal
 
 import numpy as np
 import pandas as pd
@@ -131,28 +134,17 @@ def test_simhash16_matches_python(spark, docs):
         assert got[row["doc_id"]] == _py_simhash16(row["text"]), row["doc_id"]
 
 
-def test_simhash64_runs_and_is_stable(spark, docs):
-    from intelligent_log_analysis_anomaly_detection_tool_spark.operators.dedup import (
-        simhash64,
-    )
-
-    a = simhash64(docs).toPandas().sort_values("doc_id", ignore_index=True)
-    b = simhash64(docs).toPandas().sort_values("doc_id", ignore_index=True)
-    pd.testing.assert_frame_equal(a, b)
-    assert a["simhash"].nunique() > 1
-
-
 def test_hamming_near_dup_recall_vs_brute(spark, docs):
     """Block-permutation Hamming join must find EXACTLY the pairs a brute
     all-pairs python scan finds (recall 1.0 by pigeonhole, precision 1.0 by
     the exact bit_count verify) on the 64-bit fingerprint."""
     from intelligent_log_analysis_anomaly_detection_tool_spark.operators.dedup import (
         hamming_near_dup_pairs,
-        simhash64,
+        simhash64_md5,
     )
 
     k = 3
-    sim = simhash64(docs)
+    sim = simhash64_md5(docs)
     fps = sim.toPandas()
     ids = fps["doc_id"].tolist()
     hs = [h & ((1 << 64) - 1) for h in fps["simhash"].tolist()]
@@ -276,7 +268,94 @@ def test_lsh_pairs_catch_high_jaccard(spark, docs):
         assert len(pairs) >= dup_groups
 
 
-# --- jaccard adaptive plan (VERDICT r2 item 3 / ADVICE r2 item 1) ----------
+# --- exact jaccard: dense / prefix plans vs a brute-force reference -------
+
+_JAVA_WS = re.compile(r"[ \t\n\x0b\f\r]+")  # Spark split's \s class
+
+
+def _jaccard_corpus(n, vocab_size, max_tokens, seed):
+    """Adversarial (doc_id, text) rows: random docs over ``vocab_size``
+    words, the bigram "hot shingle" in over half of them, empty,
+    whitespace-only and single-token texts, exact duplicates, and three
+    NULL texts."""
+    rng = random.Random(seed)
+    vocab = [f"w{i}" for i in range(vocab_size)]
+    rows = []
+    for i in range(n):
+        txt = " ".join(rng.choice(vocab)
+                       for _ in range(rng.randint(1, max_tokens)))
+        if i % 2 == 0:
+            txt = "hot shingle " + txt
+        elif i % 17 == 0:
+            txt = ""
+        elif i % 19 == 0:
+            txt = rng.choice(vocab)
+        elif i % 23 == 0:
+            txt = rows[i - 1][1]
+        rows.append((i, txt))
+    rows += [(n, None), (n + 1, " \t  "), (n + 2, None), (n + 3, "\n"),
+             (n + 4, None)]
+    assert 2 * sum("hot shingle" in (t or "") for _, t in rows) >= len(rows)
+    return rows
+
+
+def _py_shingles(text, n):
+    """Distinct n-word STRING shingles with the operator's semantics:
+    whitespace tokens, and a doc of fewer than n tokens is one shingle."""
+    toks = [t for t in _JAVA_WS.split(text) if t]
+    if len(toks) < n:
+        return {" ".join(toks)}
+    return {" ".join(toks[i:i + n]) for i in range(len(toks) - n + 1)}
+
+
+def _brute_jaccard(rows, n, threshold):
+    """Exact jaccard pairs in pure Python on _py_shingles: NULL texts have
+    no shingles, pairs sharing no shingle are never emitted, and jaccard is
+    rounded half-up to 4 places (Spark's round) before the threshold."""
+    sets = [(i, _py_shingles(t, n)) for i, t in rows if t is not None]
+    out = []
+    for x, (ia, sa) in enumerate(sets):
+        for ib, sb in sets[x + 1:]:
+            inter = len(sa & sb)
+            if not inter:
+                continue
+            j = float(Decimal(repr(inter / (len(sa) + len(sb) - inter)))
+                      .quantize(Decimal("0.0001"), ROUND_HALF_UP))
+            if j >= threshold:
+                out.append((min(ia, ib), max(ia, ib), inter, j))
+    want = pd.DataFrame(out, columns=["doc_a", "doc_b", "inter", "jaccard"])
+    want = want.astype({"doc_a": "int64", "doc_b": "int64", "inter": "int64",
+                        "jaccard": "float64"})
+    return want.sort_values(["doc_a", "doc_b"], ignore_index=True)
+
+
+def _assert_jaccard_plans_match_brute(spark, rows, plans=("dense", "prefix")):
+    """Every plan (and dense forced to 9 blocks) gives the brute-force rows
+    and dtypes at thresholds 0.3 and 0.0 (where inter > 0 must still gate
+    emission)."""
+    from intelligent_log_analysis_anomaly_detection_tool_spark.operators.dedup import (
+        _jaccard_blocked_bitset,
+        ngram_jaccard_pairs,
+        word_shingle_hashes,
+    )
+
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    arr = docs.select(
+        F.col("doc_id"), word_shingle_hashes(F.col("text"), 2).alias("shh_arr")
+    )
+
+    def run(df):
+        return df.toPandas().sort_values(["doc_a", "doc_b"], ignore_index=True)
+
+    for thr in (0.3, 0.0):
+        want = _brute_jaccard(rows, 2, thr)
+        assert len(want) > 0
+        for plan in plans:
+            got = run(ngram_jaccard_pairs(docs, shingle_n=2, threshold=thr,
+                                          plan=plan))
+            pd.testing.assert_frame_equal(got, want, obj=f"{plan} @ {thr}")
+        got = run(_jaccard_blocked_bitset(arr, "doc_id", thr, 9, "bigint"))
+        pd.testing.assert_frame_equal(got, want, obj=f"dense/9 blocks @ {thr}")
 
 
 def test_choose_jaccard_plan():
@@ -284,83 +363,76 @@ def test_choose_jaccard_plan():
         choose_jaccard_plan,
     )
 
-    # small vocab, small corpus -> dense
-    assert choose_jaccard_plan(931, 5000, 36_500_000)[0] == "dense"
-    # small vocab, huge corpus, CHEAP join -> count_join (10M pair rows
-    # beat 1.25e11 dense pair-evals)
-    plan, _ = choose_jaccard_plan(1000, 500_000, 10_000_000)
-    assert plan == "count_join"
-    # small vocab, huge corpus, join over budget -> DENSE, not prefix (r6):
+    def uniform(n_docs, n_vocab=961, doc_shingles=20):
+        """Stats of a narrow corpus where every shingle is in the same share
+        of docs (the benchmark and oracle shape): near-all-pairs sharing."""
+        df = n_docs * doc_shingles // n_vocab
+        return n_vocab, n_docs, n_vocab * (df * (df - 1) // 2), df
+
+    # the uniform narrow shape goes dense at ANY size, past 32 blocks too:
     # prefix candidates degenerate to ~all-pairs through a shuffle+distinct
-    # on a narrow vocabulary, while the chunked dense kernel bounds every
-    # task at two 64 MB blocks whatever the block count (the old 32-block
-    # gate guarded full |A|x|B| output matrices that no longer exist)
-    plan, nb = choose_jaccard_plan(1000, 500_000, 10**12)
-    assert plan == "dense" and nb > 32
-    # big vocab, cheap join -> count_join
-    assert choose_jaccard_plan(10**7, 10**6, 1_000_000)[0] == "count_join"
-    # big vocab, hot shingle (50% df => n^2/8 pair rows) -> prefix
-    assert choose_jaccard_plan(10**7, 10**6, 10**6 * 10**6 // 8)[0] == "prefix"
+    # there, while the chunked dense kernel bounds every task at two blocks
+    for n in (400, 5000, 50_000, 500_000, 10**7):
+        assert choose_jaccard_plan(*uniform(n))[0] == "dense", n
+    assert choose_jaccard_plan(*uniform(10**7))[1] > 32
+    # sf0.1's measured stats: small vocab, small corpus -> dense
+    assert choose_jaccard_plan(931, 5000, 36_500_000, 600)[0] == "dense"
+    # sparse narrow-vocabulary corpus past 32 blocks with ONE shingle in 50%
+    # of docs: the hot shingle alone is ~n^2/8 pair rows, but the other
+    # shingles are rare (10 per doc, df 20 each) -> prefix
+    n, hot = 500_000, 250_000
+    sparse = (n * 10 // 20) * (20 * 19 // 2)
+    plan, nb = choose_jaccard_plan(1000, n, hot * (hot - 1) // 2 + sparse, hot)
+    assert plan == "prefix" and nb > 32
+    # wide vocabulary -> prefix, sparse or hot
+    assert choose_jaccard_plan(10**7, 10**6, 1_000_000, 3)[0] == "prefix"
+    assert choose_jaccard_plan(10**7, 10**6, 10**6 * 10**6 // 8,
+                               10**6 // 2)[0] == "prefix"
 
 
 def test_jaccard_three_plans_identical(spark, docs):
-    """dense / count_join / prefix must produce identical exact results."""
-    from intelligent_log_analysis_anomaly_detection_tool_spark.operators.dedup import (
-        ngram_jaccard_pairs,
+    """On the sf0.001 documents, dense (auto-sized), dense at 9 blocks and
+    prefix all give the brute-force reference's rows and dtypes."""
+    rows = [(r["doc_id"], r["text"]) for r in docs.select("doc_id", "text").collect()]
+    _assert_jaccard_plans_match_brute(spark, rows)
+
+
+def test_jaccard_hot_shingle_adversarial(spark, monkeypatch):
+    """A wide-vocabulary corpus (past the dense bitset's 65,536 shingles)
+    with one shingle in over half of the docs: the chooser sees the
+    corpus's true shingle statistics (NULL texts add no shingle), auto takes
+    the prefix plan, and auto, dense and prefix all give the brute-force
+    reference."""
+    from collections import Counter
+
+    from intelligent_log_analysis_anomaly_detection_tool_spark.operators import (
+        dedup,
     )
 
-    outs = {}
-    for plan in ("dense", "count_join", "prefix"):
-        pdf = ngram_jaccard_pairs(
-            docs, shingle_n=2, threshold=0.2, plan=plan
-        ).toPandas()
-        outs[plan] = pdf.sort_values(["doc_a", "doc_b"], ignore_index=True)
-    assert len(outs["dense"]) > 0
-    pd.testing.assert_frame_equal(outs["dense"], outs["count_join"])
-    pd.testing.assert_frame_equal(outs["dense"], outs["prefix"])
+    calls = []
+    real_prefix = dedup._jaccard_prefix_hash
+    real_choose = dedup.choose_jaccard_plan
 
+    def spy_prefix(*a, **k):
+        calls.append("prefix")
+        return real_prefix(*a, **k)
 
-def test_jaccard_hot_shingle_adversarial(spark):
-    """One shingle shared by 50% of docs (the count-join's quadratic shape):
-    auto must pick the prefix plan under a tight budget and return exactly
-    the count-join's (budget-ignoring) output."""
-    import pandas as pd
+    def spy_choose(*a):
+        calls.append(a)
+        return real_choose(*a)
 
-    from intelligent_log_analysis_anomaly_detection_tool_spark.operators.dedup import (
-        choose_jaccard_plan,
-        ngram_jaccard_pairs,
-    )
-
-    n = 400
-    rows = []
-    for i in range(n):
-        # unique tail so docs are not duplicates; every even doc carries the
-        # hot phrase "hot shingle here"
-        base = f"u{i}a u{i}b u{i}c u{i}d u{i}e u{i}f"
-        if i % 2 == 0:
-            base = "hot shingle here " + base
-        if i % 97 == 0 and i > 0:
-            # a few true near-dups of doc i-1
-            base = base.replace(f"u{i}f", f"u{i-1}f").replace(
-                f"u{i}e", f"u{i-1}e"
-            )
-        rows.append((i, base))
+    monkeypatch.setattr(dedup, "_jaccard_prefix_hash", spy_prefix)
+    monkeypatch.setattr(dedup, "choose_jaccard_plan", spy_choose)
+    rows = _jaccard_corpus(400, 10**6, 400, seed=11)
     docs = spark.createDataFrame(rows, "doc_id long, text string")
-
-    # with a tight budget, the hot shingle's df=200 alone contributes
-    # 200*199/2 = 19900 pair rows -> auto must choose prefix
-    got = ngram_jaccard_pairs(
-        docs, shingle_n=2, threshold=0.2, count_join_budget=10_000
-    ).toPandas().sort_values(["doc_a", "doc_b"], ignore_index=True)
-    want = ngram_jaccard_pairs(
-        docs, shingle_n=2, threshold=0.2, plan="count_join"
-    ).toPandas().sort_values(["doc_a", "doc_b"], ignore_index=True)
-    pd.testing.assert_frame_equal(got, want)
-    # and the decision rule itself picks prefix for this shape
-    assert choose_jaccard_plan(
-        n_vocab=70000, n_docs=n, count_join_rows=19900,
-        count_join_budget=10_000,
-    )[0] == "prefix"
+    dedup.ngram_jaccard_pairs(docs, shingle_n=2, threshold=0.3)
+    dfs = Counter(sh for _, t in rows if t is not None
+                  for sh in _py_shingles(t, 2))
+    stats = (len(dfs), len(rows), sum(d * (d - 1) // 2 for d in dfs.values()),
+             max(dfs.values()))
+    assert calls == [stats, "prefix"]
+    _assert_jaccard_plans_match_brute(spark, rows,
+                                      plans=("auto", "dense", "prefix"))
 
 
 def test_ivf_centroid_reuse_skips_fit(spark, emb, monkeypatch):
@@ -423,49 +495,72 @@ def test_cosine_near_dup_exact_matches_numpy(spark, emb):
 
 
 def test_jaccard_dense_kernel_adversarial(spark):
-    """r6 kernel stress: many blocks (several groups per task, so the
-    buffer-reuse cache sees varying shapes), empty and whitespace-only
-    texts, exact duplicates, several NULL texts, and the threshold=0.0 edge
-    (inter > 0 must still gate emission). dense (auto-sized and forced to 9
-    blocks), count_join and prefix must return identical rows and dtypes on
-    all of it; two NULL texts must never pair."""
-    import random
+    """r6 kernel stress on a narrow vocabulary: many blocks (several groups
+    per task, so the buffer-reuse cache sees varying shapes), NULL, empty,
+    whitespace-only and single-token texts, exact duplicates and a shingle
+    in half of the docs. dense (auto-sized and forced to 9 blocks) and
+    prefix must give the brute-force reference, so two NULL texts never
+    pair."""
+    _assert_jaccard_plans_match_brute(spark, _jaccard_corpus(600, 18, 24, seed=7))
 
+
+def test_jaccard_releases_shingle_caches(spark):
+    """After ngram_jaccard_pairs returns, on the dense and on the prefix
+    path, the only new persistent RDD is the result's own checkpoint: the
+    per-doc shingle cache and the prefix plan's exploded stream are gone."""
     from intelligent_log_analysis_anomaly_detection_tool_spark.operators.dedup import (
-        _jaccard_blocked_bitset,
         ngram_jaccard_pairs,
-        word_shingle_hashes,
     )
 
-    rng = random.Random(7)
-    vocab = [f"w{i}" for i in range(18)]
-    rows = []
-    for i in range(600):
-        txt = " ".join(rng.choice(vocab) for _ in range(rng.randint(0, 24)))
-        if i % 17 == 0:
-            txt = ""
-        if i % 23 == 0 and i:
-            txt = rows[i - 1][1]
-        rows.append((i, txt))
-    rows += [(601, None), (602, None), (603, " \t  "), (604, None)]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    nulls = {601, 602, 604}
+    jsc = spark.sparkContext._jsc
 
-    def run(df):
-        return df.toPandas().sort_values(["doc_a", "doc_b"], ignore_index=True)
+    def persistent_ids():
+        return set(jsc.getPersistentRDDs().keySet().toArray())
 
-    for thr in (0.3, 0.0):
-        want = run(ngram_jaccard_pairs(docs, shingle_n=2, threshold=thr,
-                                       plan="count_join"))
-        assert len(want) > 0
-        assert not (want["doc_a"].isin(nulls) | want["doc_b"].isin(nulls)).any()
-        for plan in ("dense", "prefix"):
-            got = run(ngram_jaccard_pairs(docs, shingle_n=2, threshold=thr,
-                                          plan=plan))
-            pd.testing.assert_frame_equal(got, want, obj=plan)
-        arr = docs.select(
-            F.col("doc_id"),
-            word_shingle_hashes(F.col("text"), 2).alias("shh_arr"),
-        ).localCheckpoint(eager=True)
-        got = run(_jaccard_blocked_bitset(arr, "doc_id", thr, 9, "bigint"))
-        pd.testing.assert_frame_equal(got, want, obj="dense/9 blocks")
+    docs = spark.createDataFrame(_jaccard_corpus(200, 18, 24, seed=3),
+                                 "doc_id long, text string")
+    for plan in ("dense", "prefix"):
+        before = persistent_ids()
+        out = ngram_jaccard_pairs(docs, shingle_n=2, threshold=0.3, plan=plan)
+        result_rdd = out._jdf.queryExecution().logical().rdd().id()
+        assert persistent_ids() - before == {result_rdd}, plan
+
+
+def test_cross_pairs_kernel_batch_row_bound(monkeypatch):
+    """The dense-Hamming cross kernel yields batches of at most
+    _CROSS_BATCH_ROWS rows, splitting a skewed value pair across batches,
+    and the rows are identical whatever the bound (also on a sliced
+    input batch, whose list offsets do not start at 0)."""
+    import pyarrow as pa
+
+    from intelligent_log_analysis_anomaly_detection_tool_spark.operators import (
+        dedup,
+    )
+
+    ids_a = [[1, 2, 3], list(range(100, 140)), [7], [8, 9]]
+    ids_b = [[4, 5], list(range(200, 230)), [6], [10, 11, 12]]
+    ham = [1, 2, 3, 0]
+    batch = pa.record_batch(
+        [pa.array(ids_a, pa.list_(pa.int64())),
+         pa.array(ids_b, pa.list_(pa.int64())), pa.array(ham, pa.int32())],
+        names=["ids_a", "ids_b", "hamming"],
+    )
+
+    def brute(lo, hi):
+        return [(min(a, b), max(a, b), h)
+                for la, lb, h in zip(ids_a[lo:hi], ids_b[lo:hi], ham[lo:hi])
+                for a in la for b in lb]
+
+    def run(b):
+        outs = list(dedup._cross_pairs_kernel([b]))
+        rows = [r for o in outs for r in zip(*(c.to_pylist() for c in o.columns))]
+        return outs, rows
+
+    outs, want = run(batch)
+    assert len(outs) == 1 and want == brute(0, 4)
+    assert outs[0].schema.types == [pa.int64(), pa.int64(), pa.int32()]
+    monkeypatch.setattr(dedup, "_CROSS_BATCH_ROWS", 7)
+    outs, got = run(batch)
+    assert got == want
+    assert max(o.num_rows for o in outs) <= 7 and len(outs) == -(-len(want) // 7)
+    assert run(batch.slice(1, 2))[1] == brute(1, 3)
