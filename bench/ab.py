@@ -19,9 +19,13 @@ For every metric the report gives each side's median and quartiles, the
 change/base ratio of the medians, and the pairs the change won (ties count
 for neither side). A gain is claimed only when the change wins at least
 nine tenths of the pairs AND the medians differ by more than the distance
-between the base's quartiles. The last line of standard output is the whole
-report, raw runs included, as one JSON object; ``--out`` also writes it to
-a file.
+between the base's quartiles. Each run also records the host steal that
+perfbench prints on its summary line (``host_steal_pct=``, the share of CPU
+time the hypervisor gave to other guests), and the report prints each
+side's median steal next to the metric table: a pair in which one side had
+several points more steal than the other is host noise, not a result. The
+last line of standard output is the whole report, raw runs included, as one
+JSON object; ``--out`` also writes it to a file.
 """
 
 from __future__ import annotations
@@ -29,6 +33,7 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import re
 import statistics
 import subprocess
 import sys
@@ -44,15 +49,27 @@ def _git(*args: str) -> str:
 
 def run_once(checkout: str, workload: str, seed: int, seconds: float,
              trace: int) -> dict:
-    """One perfbench run in ``checkout``; its final JSON line, or a record
-    of the failure."""
+    """One perfbench run in ``checkout``: its final JSON line plus the
+    ``host_steal_pct`` of the summary line before it, or a record of the
+    failure."""
     cmd = [sys.executable, "perfbench/run.py", "--workload", workload,
            "--seed", str(seed), "--seconds", str(seconds), "--trace", str(trace)]
     proc = subprocess.run(cmd, cwd=checkout, capture_output=True, text=True)
     lines = proc.stdout.strip().splitlines()
     if proc.returncode != 0 or not lines:
         return {"error": proc.stderr[-2000:], "returncode": proc.returncode}
-    return json.loads(lines[-1])
+    run = json.loads(lines[-1])
+    steal = re.search(r"\bhost_steal_pct=([0-9.]+)",
+                      lines[-2] if len(lines) > 1 else "")
+    run["host_steal_pct"] = float(steal.group(1)) if steal else None
+    return run
+
+
+def median_steal(runs: list[dict]) -> float | None:
+    """Median host steal (%) over the runs that reported one."""
+    vals = [r["host_steal_pct"] for r in runs
+            if r.get("host_steal_pct") is not None]
+    return statistics.median(vals) if vals else None
 
 
 def summarize(runs: dict[str, list[dict]], specs: list[dict]) -> dict:
@@ -120,6 +137,7 @@ def main() -> None:
                              bench["run_seconds"], args.trace)
                 runs[side].append(r)
                 print(f"pair {i} seed {seed} {side}: failed={r.get('failed')} "
+                      f"steal={r.get('host_steal_pct')} "
                       f"{r.get('error', '')[-300:]}", file=sys.stderr)
     finally:
         if worktree is not None:
@@ -130,6 +148,7 @@ def main() -> None:
         "base": _git("rev-parse", args.base) if args.base_dir is None else base_dir,
         "seeds": [args.seed0, args.seed0 + args.pairs - 1],
         "failed": {k: [r.get("failed") for r in v] for k, v in runs.items()},
+        "host_steal_pct_median": {k: median_steal(v) for k, v in runs.items()},
         "metrics": summarize(runs, specs),
         "runs": runs,
     }
@@ -140,6 +159,9 @@ def main() -> None:
               f"{m['change']['q3']:.3f}]  ratio {m['ratio'] or 0:.3f}  "
               f"wins {m['change_wins']}/{m['pairs']}"
               f"{'  GAIN' if m['gain'] else ''}", file=sys.stderr)
+    print("host steal % median  " + "  ".join(
+        f"{k} {'n/a' if v is None else f'{v:.2f}'}"
+        for k, v in report["host_steal_pct_median"].items()), file=sys.stderr)
     if args.out:
         with open(args.out, "w") as fh:
             json.dump(report, fh, indent=1)

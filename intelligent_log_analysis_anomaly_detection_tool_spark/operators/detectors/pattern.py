@@ -196,7 +196,13 @@ def _sig_base(parsed: DataFrame, cfg: PatternConfig) -> DataFrame:
     Partitioning AND ordering of an explicit repartition +
     sortWithinPartitions survive caching (InMemoryTableScan reports them;
     pinned by tests/test_plan_shapes.py), so the gram kernel over this base
-    plans with ZERO additional exchange and ZERO sort.
+    plans with ZERO additional exchange and ZERO sort. The hash clustering
+    also survives AQE coalescing of the cached plan (session.py enables
+    it): a coalesced partition holds whole hash partitions, so every
+    (conv_id, bucket) chunk still sits in one partition. The partition
+    COUNT does not survive: it follows the data size (1 on a 10k-row
+    input, not spark.sql.shuffle.partitions), so nothing may assume the
+    base has the shuffle width.
 
     BOUNDED CHUNKS: bucket = turn_idx // C splits a hot conversation (the
     bench corpus keeps ~10% of all rows in one conv_id; so do real agent-log

@@ -136,13 +136,21 @@ def run_concurrent_dag(
 
     The parse-materialize count is submitted FIRST, and every branch plan
     (online union, frequency, pattern, timewindow, minute pivot) is
-    constructed WHILE that job runs — none of them runs an action during
-    construction, so the driver never builds a plan with the cluster idle.
-    Once the pattern leaf's action returns, its memoized _sig_base cache is
-    released (unpersist_pattern_caches), so repeated passes leave no
-    MEMORY_AND_DISK base behind.
+    constructed while that job runs; none of them runs an action during
+    construction. The overlap is partial. On the 10k-row dag_mixed input
+    (4-core host), building the five plans takes ~3.3-7 s warm, depending
+    on the host's load, and makes ~11.4k py4j round trips; about half of
+    them are PySpark's per-call call-site capture
+    (``spark.python.sql.dataFrameDebugging.enabled``). The parse count takes
+    ~1 s, so the cluster sits idle for seconds in every warm pass (2.2-4.5 s
+    in one measured set). Once the pattern leaf's action returns, its
+    memoized _sig_base cache is released (unpersist_pattern_caches), so
+    repeated passes leave no MEMORY_AND_DISK base behind.
 
-    Returns the persisted frames so callers control unpersist timing.
+    Returns the persisted frames so callers control unpersist timing. If
+    the parse count or any branch raises, the parsed, online and _sig_base
+    caches are released before the exception propagates: the caller gets
+    no frames to release them with.
     """
     from concurrent.futures import ThreadPoolExecutor
 
@@ -151,37 +159,48 @@ def run_concurrent_dag(
             df.write.format("noop").mode("overwrite").save()
 
     parsed = parse_stage_pipeline(transcripts).persist()
-    builders = offline_anomaly_builders(parsed, cfg)
-    with ThreadPoolExecutor(max_workers=4) as ex:
-        parse_fut = ex.submit(parsed.count)
-        # action-free plan construction, overlapped with the parse job
-        online = online_anomalies(parsed, cfg).persist()
-        freq_plan = builders["frequency"]()
-        pattern_plan = builders["pattern"]()
-        tw_plan = builders["timewindow"]()
-        minutes_plan = minute_stats(parsed, online)
-        parse_fut.result()
+    online = None
+    try:
+        builders = offline_anomaly_builders(parsed, cfg)
+        with ThreadPoolExecutor(max_workers=4) as ex:
+            parse_fut = ex.submit(parsed.count)
+            # action-free plan construction, overlapped with the parse job
+            online = online_anomalies(parsed, cfg).persist()
+            freq_plan = builders["frequency"]()
+            pattern_plan = builders["pattern"]()
+            tw_plan = builders["timewindow"]()
+            minutes_plan = minute_stats(parsed, online)
+            parse_fut.result()
 
-        def _online_then_minutes():
-            # minutes reads the persisted online union — keep it behind the
-            # online count so concurrent jobs never race to fill that cache
-            online.count()
-            action(minutes_plan)
+            def _online_then_minutes():
+                # minutes reads the persisted online union — keep it behind
+                # the online count so concurrent jobs never race to fill
+                # that cache
+                online.count()
+                action(minutes_plan)
 
-        def _pattern_then_release():
-            try:
-                action(pattern_plan)
-            finally:
-                unpersist_pattern_caches(parsed)
+            def _pattern_then_release():
+                try:
+                    action(pattern_plan)
+                finally:
+                    unpersist_pattern_caches(parsed)
 
-        futs = [
-            ex.submit(_online_then_minutes),
-            ex.submit(lambda: action(freq_plan)),
-            ex.submit(_pattern_then_release),
-            ex.submit(lambda: action(tw_plan)),
-        ]
-        for f in futs:
-            f.result()
+            futs = [
+                ex.submit(_online_then_minutes),
+                ex.submit(lambda: action(freq_plan)),
+                ex.submit(_pattern_then_release),
+                ex.submit(lambda: action(tw_plan)),
+            ]
+            for f in futs:
+                f.result()
+    except BaseException:
+        # leaving the executor block waited for every branch, so nothing
+        # still reads these caches
+        unpersist_pattern_caches(parsed)
+        if online is not None:
+            online.unpersist()
+        parsed.unpersist()
+        raise
     return {"parsed": parsed, "online": online}
 
 
