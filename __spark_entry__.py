@@ -411,16 +411,17 @@ FROM w WHERE prev IS NOT NULL GROUP BY 1
 
 def q_burst_normalize(spark, sf_dir):
     """P10: burst message normalization (<id>/<n>/whitespace collapse) +
-    grouped repeat counts, on the documents corpus."""
+    grouped repeat counts, on the documents corpus. Runs the engine's own
+    burst.normalized_message, so the oracle pairing covers that expression."""
     _utc(spark)
-    d = _documents(spark, sf_dir)
-    s = F.lower(F.col("text"))
-    s = F.regexp_replace(s, r"[0-9a-f]{8,}", "<id>")
-    s = F.regexp_replace(s, r"\b\d+\b", "<n>")
-    s = F.trim(F.regexp_replace(s, r"\s+", " "))
-    return d.select(s.alias("norm")).groupBy("norm").agg(
-        F.count(F.lit(1)).alias("n")
+    from intelligent_log_analysis_anomaly_detection_tool_spark.operators.detectors.burst import (
+        normalized_message,
     )
+
+    d = _documents(spark, sf_dir)
+    return d.select(normalized_message(F.col("text")).alias("norm")).groupBy(
+        "norm"
+    ).agg(F.count(F.lit(1)).alias("n"))
 
 
 SQL_BURST_NORMALIZE = """

@@ -136,9 +136,6 @@ def main() -> None:
     from intelligent_log_analysis_anomaly_detection_tool_spark.operators.aggregates import (
         minute_stats,
     )
-    from intelligent_log_analysis_anomaly_detection_tool_spark.operators.detectors.pattern import (
-        unpersist_pattern_caches,
-    )
     from intelligent_log_analysis_anomaly_detection_tool_spark.plans.pipeline import (
         offline_anomalies,
         online_anomalies,
@@ -176,7 +173,6 @@ def main() -> None:
         + timings["detect_offline"]
         + timings["aggregate_minutes"]
     )
-    unpersist_pattern_caches(parsed)
     parsed.unpersist()
     online.unpersist()
 

@@ -97,40 +97,41 @@ def run_resumable(
         batch = pending[lo : lo + buckets_per_batch]
         part = bt.filter(F.col("bucket").isin([int(b) for b in batch]))
         parsed = parse_stage(part).persist()
-        anomalies = all_anomalies(parsed, cfg)
-
-        input_rows = {
-            r["bucket"]: r["n"]
-            for r in part.groupBy("bucket").agg(F.count(F.lit(1)).alias("n")).collect()
-        }
-        parse_counts = {
-            (r["bucket"], bool(r["malformed"])): r["n"]
-            for r in parsed.groupBy("bucket", "malformed")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        }
-        conv_bucket = part.select("conv_id", "bucket").distinct()
-        anom_counts = (
-            anomalies.join(conv_bucket, "conv_id")
-            .groupBy("bucket", "detector")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        )
-        anom_by_bucket: dict[int, dict[str, int]] = {}
-        for r in anom_counts:
-            anom_by_bucket.setdefault(r["bucket"], {})[r["detector"]] = r["n"]
-
-        # materialize routed sink data per bucket directory (partition commit)
-        (
-            anomalies.join(conv_bucket, "conv_id")
-            .write.mode("overwrite")
-            .partitionBy("bucket")
-            .parquet(os.path.join(out_dir, "anomalies_routed"))
-        )
-        parsed.write.mode("overwrite").partitionBy("bucket").parquet(
-            os.path.join(out_dir, "parsed_turns")
-        )
-        parsed.unpersist()
+        # the bucket is a pure hash of conv_id, so the anomalies bucket
+        # themselves; persisted so the write and the count share ONE pass
+        anomalies = with_bucket(all_anomalies(parsed, cfg), n_buckets).persist()
+        try:
+            # counted from the input, not from parsed: the lineage check
+            input_rows = {
+                r["bucket"]: r["n"]
+                for r in part.groupBy("bucket")
+                .agg(F.count(F.lit(1)).alias("n"))
+                .collect()
+            }
+            parse_counts = {
+                (r["bucket"], bool(r["malformed"])): r["n"]
+                for r in parsed.groupBy("bucket", "malformed")
+                .agg(F.count(F.lit(1)).alias("n"))
+                .collect()
+            }
+            # materialize routed sink data per bucket directory (partition
+            # commit)
+            anomalies.write.mode("overwrite").partitionBy("bucket").parquet(
+                os.path.join(out_dir, "anomalies_routed")
+            )
+            anom_by_bucket: dict[int, dict[str, int]] = {}
+            for r in (
+                anomalies.groupBy("bucket", "detector")
+                .agg(F.count(F.lit(1)).alias("n"))
+                .collect()
+            ):
+                anom_by_bucket.setdefault(r["bucket"], {})[r["detector"]] = r["n"]
+            parsed.write.mode("overwrite").partitionBy("bucket").parquet(
+                os.path.join(out_dir, "parsed_turns")
+            )
+        finally:
+            anomalies.unpersist()
+            parsed.unpersist()
 
         for b in batch:
             lineage = {

@@ -734,7 +734,15 @@ def _hamming_dense_value_space(sim: DataFrame, id_col: str, max_hamming: int,
     - the slim (v1, v2, m) value-pair stream is round-robin repartitioned to
       2x defaultParallelism before the id lists are attached: AQE coalesces
       the tiny |V|-row shuffle to ONE partition, which would serialize the
-      entire output explode into a single task (149 s -> ~5 s)."""
+      entire output explode into a single task (149 s -> ~5 s).
+
+    Ids must be integral (int or bigint): the cross kernel emits them as
+    Arrow integers."""
+    id_type = sim.schema[id_col].dataType.simpleString()
+    if id_type not in ("bigint", "int"):
+        raise ValueError(
+            f"dense Hamming plan needs int or bigint ids; {id_col} is {id_type}"
+        )
     g = sim.groupBy("simhash").agg(
         F.collect_list(id_col).alias("ids")
     ).localCheckpoint(eager=True)
@@ -758,22 +766,10 @@ def _hamming_dense_value_space(sim: DataFrame, id_col: str, max_hamming: int,
         .withColumn("hamming", F.bit_count(F.col("m")).cast("int"))
         .select("ids_a", "ids_b", "hamming")
     )
-    id_type = sim.schema[id_col].dataType.simpleString()
-    if id_type in ("bigint", "int"):
-        diff = joined.mapInArrow(
-            _cross_pairs_kernel,
-            f"doc_a {id_type}, doc_b {id_type}, hamming int",
-        )
-    else:  # non-integral ids: chained-Generate explode (same rows, slower)
-        diff = (
-            joined.select(F.explode("ids_a").alias("ia"), "ids_b", "hamming")
-            .select("ia", F.explode("ids_b").alias("ib"), "hamming")
-            .select(
-                F.least("ia", "ib").alias("doc_a"),
-                F.greatest("ia", "ib").alias("doc_b"),
-                "hamming",
-            )
-        )
+    diff = joined.mapInArrow(
+        _cross_pairs_kernel,
+        f"doc_a {id_type}, doc_b {id_type}, hamming int",
+    )
     same = (
         g.filter(F.size("ids") > 1)
         .select(F.explode("ids").alias("doc_a"), "ids")

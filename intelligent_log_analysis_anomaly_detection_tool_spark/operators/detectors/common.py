@@ -32,14 +32,20 @@ def with_epoch(df: DataFrame, ts_col: str = "ts_parsed") -> DataFrame:
     return df.withColumn("epoch", F.unix_timestamp(F.col(ts_col)))
 
 
-def file_order_window(*part_cols: str) -> WindowSpec:
-    return Window.partitionBy(*part_cols).orderBy("turn_idx")
+def conv_time_range(parsed: DataFrame) -> DataFrame:
+    """(conv_id, min_ts, max_ts) over the non-malformed rows: the
+    [minTs, maxTs] window the frequency and pattern anomalies carry."""
+    return (
+        parsed.filter(~F.col("malformed"))
+        .groupBy("conv_id")
+        .agg(F.min("ts_parsed").alias("min_ts"), F.max("ts_parsed").alias("max_ts"))
+    )
 
 
 def event_order_window(*part_cols: str) -> WindowSpec:
     """(epoch, turn_idx)-ordered rank/prefix window.
 
-    Identical to ``file_order_window`` under the engine's documented
+    Identical to a turn_idx-ordered window under the engine's documented
     per-conversation ts-monotonicity invariant (turn_idx breaks epoch ties
     deterministically, and turn_idx order == (epoch, turn_idx) order when
     epoch is non-decreasing in turn_idx). The point of using it instead:

@@ -24,12 +24,12 @@ from __future__ import annotations
 
 import pandas as pd
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
 from ...config import FrequencyConfig
-from .common import S_MED, T_FREQ_SPIKE, as_anomaly, file_order_window
+from .common import S_MED, T_FREQ_SPIKE, as_anomaly, conv_time_range
 
 
 def message_hash(col: Column, k: int = 3) -> Column:
@@ -51,19 +51,11 @@ def _fmt_spike():
     return pandas_udf(fmt, "string")
 
 
-def _conv_time_range(parsed: DataFrame) -> DataFrame:
-    return (
-        parsed.filter(~F.col("malformed"))
-        .groupBy("conv_id")
-        .agg(F.min("ts_parsed").alias("min_ts"), F.max("ts_parsed").alias("max_ts"))
-    )
-
-
 def frequency_anomalies(
     parsed: DataFrame, cfg: FrequencyConfig = FrequencyConfig()
 ) -> DataFrame:
     df = parsed.filter(~F.col("malformed"))
-    rng = _conv_time_range(parsed)
+    rng = conv_time_range(parsed)
 
     # A7 source moving-average spike: avg of the last `history` prefix counts
     # evaluated at the source's final event. Prefix counts are 1..n, so the

@@ -16,11 +16,12 @@ Reference semantics (/root/reference/src/analysis/PatternAnalyzer.cpp):
   pattern: <sig[:50]>..." (both fire for qualifying sigs)
 - wrapped as (SequenceViolation, Medium, [minTs,maxTs], 1.0) at main.cpp:384-392
 
-Physical design: ONE ordered pass per chunk. The persisted narrow base
-(_sig_base) is hash-partitioned by (conv_id, bucket) and sorted by
-(conv_id, bucket, turn_idx) — exactly the distribution and ordering a
-``groupBy("conv_id", "bucket").applyInArrow`` kernel requires, so the kernel
-runs with no exchange and no sort in front of it. Inside a chunk it
+Physical design: ONE ordered pass per chunk. The narrow base (_sig_base)
+is built inside the plan that reads it, hash-partitioned by (conv_id, bucket)
+and sorted by (conv_id, bucket, turn_idx) — exactly the distribution and
+ordering a ``groupBy("conv_id", "bucket").applyInArrow`` kernel requires, so
+the kernel adds no exchange and no sort of its own. Nothing is persisted:
+a pattern plan leaves no cache behind. Inside a chunk it
 enumerates every 2..W-gram once, from the gram's first row, with its
 closed-form overlap-recount weight (see _gram_kernel), sums the weights per
 distinct gram, and emits (conv_id, gh, n, seq_sig) partials; one
@@ -41,15 +42,11 @@ while every gram still sees its true successors.
 
 from __future__ import annotations
 
-import threading
-
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-_SIG_BASE_LOCK = threading.Lock()
-
 from ...config import PatternConfig
-from .common import S_MED, T_SEQ, as_anomaly
+from .common import S_MED, T_SEQ, as_anomaly, conv_time_range
 
 # Rows per pattern chunk: a conversation is split into (conv_id,
 # turn_idx // C) chunks so a hot conversation (~10% of all rows in the bench
@@ -154,10 +151,11 @@ def _gram_kernel(W: int, all_sigs: bool):
 def _gram_counts(parsed: DataFrame, cfg: PatternConfig,
                  all_sigs: bool) -> DataFrame:
     """(conv_id, gh, n, seq_sig): total overlap-recount count per distinct
-    gram of every conversation. The kernel reads the cached _sig_base in its
-    own partitioning and order; the only exchange is the (conv_id, gh)
-    merge of the chunk partials. ``all_sigs`` as in _gram_kernel."""
-    base = _sig_base_cached(parsed, cfg)
+    gram of every conversation. The kernel reads _sig_base in its own
+    partitioning and order; the only exchange after the base's is the
+    (conv_id, gh) merge of the chunk partials. ``all_sigs`` as in
+    _gram_kernel."""
+    base = _sig_base(parsed, cfg)
     conv_type = base.schema["conv_id"].dataType.simpleString()
     partials = (
         base.select("conv_id", "bucket", "turn_idx", "pad", "s0", "he")
@@ -189,18 +187,17 @@ def novel_sequences(parsed: DataFrame, cfg: PatternConfig = PatternConfig()) -> 
 
 
 def _sig_base(parsed: DataFrame, cfg: PatternConfig) -> DataFrame:
-    """The NARROW cacheable base of the whole pattern stage:
-    (conv_id, turn_idx, ts_parsed, s0, he, bucket, pad), hash-partitioned by
-    (conv_id, bucket) and sorted by (conv_id, bucket, turn_idx).
+    """The NARROW base of the gram kernel: (conv_id, turn_idx, s0, he,
+    bucket, pad), hash-partitioned by (conv_id, bucket) and sorted by
+    (conv_id, bucket, turn_idx).
 
-    Partitioning AND ordering of an explicit repartition +
-    sortWithinPartitions survive caching (InMemoryTableScan reports them;
-    pinned by tests/test_plan_shapes.py), so the gram kernel over this base
-    plans with ZERO additional exchange and ZERO sort. The hash clustering
-    also survives AQE coalescing of the cached plan (session.py enables
-    it): a coalesced partition holds whole hash partitions, so every
-    (conv_id, bucket) chunk still sits in one partition. The partition
-    COUNT does not survive: it follows the data size (1 on a 10k-row
+    The explicit repartition + sortWithinPartitions give exactly the
+    distribution and ordering the (conv_id, bucket) group kernel requires,
+    so the kernel plans with ZERO additional exchange and ZERO sort (pinned
+    by tests/test_plan_shapes.py). The hash clustering survives AQE
+    coalescing of that exchange: a coalesced partition holds whole hash
+    partitions, so every (conv_id, bucket) chunk still sits in one
+    partition. The partition COUNT follows the data size (1 on a 10k-row
     input, not spark.sql.shuffle.partitions), so nothing may assume the
     base has the shuffle width.
 
@@ -224,21 +221,9 @@ def _sig_base(parsed: DataFrame, cfg: PatternConfig) -> DataFrame:
     multi-bucket conversations' rows to extract the pad heads."""
     W = cfg.sequence_window
     C = _CHUNK_ROWS
-    # ts_parsed rides along (8 bytes/row on the persisted base) so
-    # pattern_anomalies' per-conv [min_ts, max_ts] window aggregates from
-    # THIS cache instead of re-reading ``parsed`` — in the standalone query
-    # (parsed not persisted) that second read recomputed the whole
-    # render+parse subtree. The gram kernel never selects it. Frames without
-    # it (q_novel_grams) only feed the counting consumers.
-    ts_col = (
-        F.col("ts_parsed")
-        if "ts_parsed" in parsed.columns
-        else F.lit(None).cast("timestamp").alias("ts_parsed")
-    )
     pre = parsed.filter(~F.col("malformed")).select(
         "conv_id",
         "turn_idx",
-        ts_col,
         event_signature(
             F.col("source"), F.col("level_ord"), F.col("message"),
             cfg.prefix_words, cfg.prefix_trunc,
@@ -282,8 +267,7 @@ def _sig_base(parsed: DataFrame, cfg: PatternConfig) -> DataFrame:
         .drop("rk")
     )
     pads = heads.join(bmap, on_src).select(
-        "conv_id", "turn_idx", "ts_parsed", "s0", "he",
-        F.col("m_tgt").alias("bucket"),
+        "conv_id", "turn_idx", "s0", "he", F.col("m_tgt").alias("bucket"),
     )
     chunked = pre.withColumn("pad", F.lit(False)).unionByName(
         pads.withColumn("pad", F.lit(True))
@@ -293,69 +277,16 @@ def _sig_base(parsed: DataFrame, cfg: PatternConfig) -> DataFrame:
     )
 
 
-def unpersist_pattern_caches(parsed: DataFrame, blocking: bool = False) -> int:
-    """Release every _sig_base cache memoized on ``parsed``: long-lived
-    drivers that submit many pipelines over distinct parsed frames should
-    call this when done with a frame — otherwise each frame's
-    MEMORY_AND_DISK base blocks stay resident until the frame object is
-    GC'd (a slow cache leak under sustained submission). run_concurrent_dag
-    calls it once its pattern leaf has run. Returns the number of caches
-    released."""
-    with _SIG_BASE_LOCK:
-        memo = parsed.__dict__.pop("_graft_sig_base_memo", None)
-    if not memo:
-        return 0
-    for df in memo.values():
-        df.unpersist(blocking=blocking)
-    return len(memo)
-
-
-def _sig_base_cached(parsed: DataFrame, cfg: PatternConfig) -> DataFrame:
-    """One persisted _sig_base per (parsed frame, signature params).
-
-    sequence_counts / novel_sequences / pattern_stats / pattern_anomalies'
-    time range all consume the same narrow base, so a pipeline running
-    several of them holds ONE MEMORY_AND_DISK cache and computes the base
-    exchange+sort once.
-
-    PERSIST CONTRACT: the memoized cache lives as long as the parsed
-    DataFrame OBJECT. A driver that keeps submitting pipelines over new
-    parsed frames and drops them without unpersisting accumulates dead
-    MEMORY_AND_DISK blocks until GC notices; call
-    ``unpersist_pattern_caches(parsed)`` when a frame is retired
-    (run_concurrent_dag and bench.py do)."""
-    from pyspark import StorageLevel
-
-    # sequence_window and the chunk size shape the base (pad construction),
-    # so they join the signature params in the key
-    key = (cfg.prefix_words, cfg.prefix_trunc, cfg.sequence_window, _CHUNK_ROWS)
-    with _SIG_BASE_LOCK:  # branches may be constructed from worker threads
-        memo = parsed.__dict__.setdefault("_graft_sig_base_memo", {})
-        if key not in memo:
-            memo[key] = _sig_base(parsed, cfg).persist(
-                StorageLevel.MEMORY_AND_DISK
-            )
-        return memo[key]
-
-
 def pattern_anomalies(parsed: DataFrame, cfg: PatternConfig = PatternConfig()) -> DataFrame:
     if "ts_parsed" not in parsed.columns:
         raise ValueError(
             "pattern_anomalies needs a ts_parsed column for the anomaly "
             f"window [min_ts, max_ts]; parsed has {parsed.columns}"
         )
-    # [min_ts, max_ts] per conv from the SHARED persisted base (its rows are
-    # exactly parsed's non-malformed rows; pad rows duplicate rows of the
-    # same conversation, so the min/max are unchanged by them) — reading
-    # ``parsed`` here instead re-ran the whole upstream subtree whenever the
-    # caller had not persisted it
-    rng = (
-        _sig_base_cached(parsed, cfg)
-        .groupBy("conv_id")
-        .agg(F.min("ts_parsed").alias("min_ts"), F.max("ts_parsed").alias("max_ts"))
-    )
     # one row per conv — always broadcast, never shuffle the big side
-    novel = novel_sequences(parsed, cfg).join(F.broadcast(rng), "conv_id")
+    novel = novel_sequences(parsed, cfg).join(
+        F.broadcast(conv_time_range(parsed)), "conv_id"
+    )
 
     high = (
         F.col("seq_sig").contains("ERROR")

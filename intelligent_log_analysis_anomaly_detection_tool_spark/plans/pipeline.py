@@ -21,9 +21,7 @@ from ..operators.detectors.burst import burst_anomalies
 from ..operators.detectors.common import S_LOW, T_OTHER, as_anomaly
 from ..operators.detectors.frequency import frequency_anomalies, frequency_stats
 from ..operators.detectors.online_fused import spike_statistical_anomalies
-from ..operators.detectors.pattern import (
-    pattern_anomalies, pattern_stats, unpersist_pattern_caches,
-)
+from ..operators.detectors.pattern import pattern_anomalies, pattern_stats
 from ..operators.detectors.rare_ip import rare_ip_anomalies
 from ..operators.detectors.timewindow import timewindow_anomalies
 from ..operators.enrich import dims, enrich, rule_matches
@@ -143,14 +141,13 @@ def run_concurrent_dag(
     them are PySpark's per-call call-site capture
     (``spark.python.sql.dataFrameDebugging.enabled``). The parse count takes
     ~1 s, so the cluster sits idle for seconds in every warm pass (2.2-4.5 s
-    in one measured set). Once the pattern leaf's action returns, its
-    memoized _sig_base cache is released (unpersist_pattern_caches), so
-    repeated passes leave no MEMORY_AND_DISK base behind.
+    in one measured set). The pattern branch builds its signature base
+    inside its own plan and persists nothing.
 
-    Returns the persisted frames so callers control unpersist timing. If
-    the parse count or any branch raises, the parsed, online and _sig_base
-    caches are released before the exception propagates: the caller gets
-    no frames to release them with.
+    Returns the persisted frames (parsed and online, the only caches the
+    DAG holds) so callers control unpersist timing. If the parse count or
+    any branch raises, both are released before the exception propagates:
+    the caller gets no frames to release them with.
     """
     from concurrent.futures import ThreadPoolExecutor
 
@@ -179,16 +176,10 @@ def run_concurrent_dag(
                 online.count()
                 action(minutes_plan)
 
-            def _pattern_then_release():
-                try:
-                    action(pattern_plan)
-                finally:
-                    unpersist_pattern_caches(parsed)
-
             futs = [
                 ex.submit(_online_then_minutes),
                 ex.submit(lambda: action(freq_plan)),
-                ex.submit(_pattern_then_release),
+                ex.submit(lambda: action(pattern_plan)),
                 ex.submit(lambda: action(tw_plan)),
             ]
             for f in futs:
@@ -196,7 +187,6 @@ def run_concurrent_dag(
     except BaseException:
         # leaving the executor block waited for every branch, so nothing
         # still reads these caches
-        unpersist_pattern_caches(parsed)
         if online is not None:
             online.unpersist()
         parsed.unpersist()

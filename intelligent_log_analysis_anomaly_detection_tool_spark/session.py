@@ -14,8 +14,8 @@ such a cache then runs one task per shuffle partition, each paying a fixed
 Python worker setup that at small inputs is most of a pass.
 Coalescing keeps at least ``defaultParallelism`` partitions once each would
 hold ``spark.sql.adaptive.coalescePartitions.minPartitionSize`` (1 MB), so
-large inputs keep their width: at local[4] the pattern _sig_base has 1
-partition on 10k rows, 2 on 100k and 5 on 1M.
+large inputs keep their width: at local[4] the DAG's cached online union
+drops from 28 partitions to 7 on 10k rows.
 """
 
 from __future__ import annotations
@@ -25,6 +25,9 @@ import os
 from pyspark.sql import SparkSession
 
 _MIB = 1024 * 1024
+# derive_max_partition_bytes: scan waves per core, and the split-size floor
+_SCAN_WAVES = 4
+_SCAN_FLOOR = 24 * _MIB
 
 
 def dir_bytes(path: str) -> int:
@@ -44,12 +47,10 @@ def dir_bytes(path: str) -> int:
 def derive_max_partition_bytes(
     input_bytes: int,
     parallelism: int,
-    waves: int | None = None,
-    floor: int | None = None,
     cap: int = 128 * _MIB,
 ) -> int:
-    """Per-job input-split size: target ~``waves`` scan waves at the given
-    parallelism, clamped to [floor, cap].
+    """Per-job input-split size: target ~_SCAN_WAVES scan waves at the given
+    parallelism, clamped to [_SCAN_FLOOR, cap].
 
     Round-3/4 findings (BENCH.md): a CONSTANT split size cannot serve both
     ends of the scale — Spark's 128 MB default leaves a ~1 GB input as ~7
@@ -58,8 +59,8 @@ def derive_max_partition_bytes(
     multiply the Arrow-parse per-task fixed cost and were measured
     catastrophic on the concurrent DAG at local[32] (61 s -> 137-139 s at
     both 4 MB and 8 MB splits, round 3 and round 4 independently). Hence:
-    At LOW parallelism (< 16 cores) ``input_bytes / (waves x parallelism)``
-    gives every core ~``waves`` tasks to level stragglers, with a 24 MB
+    At LOW parallelism (< 16 cores) ``input_bytes / (4 x parallelism)``
+    gives every core ~4 tasks to level stragglers, with a 24 MB
     floor above the per-task-overhead knee: at 27.9M rows / 8 cores the
     round-4 matrix reads 310 s (derived 25.6 MB) vs ~395 s (128 MB
     stragglers) vs 572 s (4 MB shatter). At HIGH parallelism (>= 16 cores)
@@ -67,18 +68,14 @@ def derive_max_partition_bytes(
     there comes from parallel DAG branches, not intra-stage scan width, and
     every sub-stock split size measured WORSE on the local[32] concurrent
     DAG (58 s at 128 MB vs 66-137 s at 96/24/8 MB — round-4 matrix), so
-    any real multi-executor cluster sees Spark's stock scan behavior.
-    Env overrides (SPARK_GRAFT_SCAN_WAVES / SPARK_GRAFT_SCAN_FLOOR /
-    round-3 split knobs) win for studies."""
-    if waves is None:
-        waves = int(os.environ.get("SPARK_GRAFT_SCAN_WAVES", "4"))
-    if floor is None:
-        floor = int(os.environ.get("SPARK_GRAFT_SCAN_FLOOR", str(24 * _MIB)))
+    any real multi-executor cluster sees Spark's stock scan behavior."""
     if input_bytes <= 0 or parallelism <= 0:
         return cap
     if parallelism >= 16:
         return cap
-    return int(min(cap, max(floor, input_bytes // (waves * parallelism))))
+    return int(
+        min(cap, max(_SCAN_FLOOR, input_bytes // (_SCAN_WAVES * parallelism)))
+    )
 
 
 def get_spark(
@@ -113,11 +110,11 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         # Let AQE coalesce the shuffle partitions of persisted plans too.
         # Spark keeps a cached plan at its full shuffle width by default, so
-        # every Python operator over a cache (the DAG's online union, the
-        # pattern _sig_base) ran one task per shuffle partition, and each
-        # Python task costs ~0.25-0.3 s of worker setup even with no rows.
-        # On the 10k-row dag_mixed input at local[4] the cached online union
-        # drops from 28 to 7 partitions and _sig_base from 8 to 1.
+        # every Python operator over a cache (the DAG's online union) ran
+        # one task per shuffle partition, and each Python task costs
+        # ~0.25-0.3 s of worker setup even with no rows. On the 10k-row
+        # dag_mixed input at local[4] the cached online union drops from 28
+        # to 7 partitions.
         .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
         # Arrow for toPandas/createDataFrame; maxRecordsPerBatch sizes the
         # batches every Python stage receives (the mapInArrow parse stage,
@@ -134,28 +131,19 @@ def get_spark(
         # input, the split size targets ~4 scan waves per core instead of a
         # constant — see derive_max_partition_bytes for the full rationale
         # (constant 128 MB starves 8 cores on GB-scale inputs; constant 4 MB
-        # shatters local[32]). The env knob remains the top-priority
-        # override for single-stage studies; with neither, Spark's 128 MB
-        # default stands (the 100 TB-correct value).
-        default_split = "128m"
+        # shatters local[32]). Without an input, Spark's 128 MB default
+        # stands (the 100 TB-correct value).
+        split = "128m"
         if input_path is not None:
             n_cores = int(cpus) if cpus.isdigit() else 32
             if master.startswith("local["):
                 inner = master[6:-1]
                 if inner.isdigit():
                     n_cores = int(inner)
-            default_split = str(
+            split = str(
                 derive_max_partition_bytes(dir_bytes(input_path), n_cores)
             )
-        builder = (
-            builder.config(
-                "spark.sql.files.maxPartitionBytes",
-                os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", default_split),
-            ).config(
-                "spark.sql.files.openCostInBytes",
-                os.environ.get("SPARK_GRAFT_OPEN_COST_BYTES", "4194304"),
-            )
-        )
+        builder = builder.config("spark.sql.files.maxPartitionBytes", split)
     # shuffle scratch on tmpfs when available: local-mode shuffles otherwise
     # contend on the (virtual) disk and cap multi-core scaling
     shm = os.environ.get("SPARK_GRAFT_LOCAL_DIR", "/dev/shm/spark-local")

@@ -48,7 +48,7 @@ def main() -> None:
 
     # a parquet-dir input engages per-job derived split sizing
     # (session.derive_max_partition_bytes): splits follow
-    # input_bytes/(waves x cores) clamped to [8 MB, 128 MB]
+    # input_bytes/(waves x cores) clamped to [24 MB, 128 MB]
     input_dir = args.input if args.input and os.path.isdir(args.input) else None
     spark = get_spark(master=args.master, app_name="run-pipeline",
                       input_path=input_dir)

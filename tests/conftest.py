@@ -19,6 +19,14 @@ def spark():
 
 
 @pytest.fixture(scope="session")
+def persistent_rdds(spark):
+    """Callable returning the ids of the RDDs Spark currently holds
+    persisted: a test compares two calls to see what it left cached."""
+    jsc = spark.sparkContext._jsc
+    return lambda: set(jsc.getPersistentRDDs().keySet().toArray())
+
+
+@pytest.fixture(scope="session")
 def fixture_pdf():
     """t_small: deterministic 50-conv transcript fixture (FIXTURES.md §1)."""
     from intelligent_log_analysis_anomaly_detection_tool_spark.synth import synth_local

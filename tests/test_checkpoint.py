@@ -62,3 +62,17 @@ def test_resume_after_injected_failure(spark, fixture_df, oracle_result, tmp_pat
         sum(x["anomalies_by_detector"].values()) for x in lineage
     )
     assert total_anoms == len(oracle_result["anomalies"])
+
+
+def test_run_resumable_leaves_no_cache(spark, fixture_df, tmp_path,
+                                      persistent_rdds):
+    """Each bucket batch releases what it persisted (the parsed frame and
+    the bucketed anomalies), so a full run adds no persistent RDD."""
+    from intelligent_log_analysis_anomaly_detection_tool_spark.checkpoint import (
+        run_resumable,
+    )
+
+    before = persistent_rdds()
+    run_resumable(spark, fixture_df, str(tmp_path / "out"), n_buckets=8,
+                  buckets_per_batch=4)
+    assert persistent_rdds() - before == set()

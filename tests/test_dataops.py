@@ -228,6 +228,27 @@ def test_hamming_dense_value_space_matches_block_path(spark, docs):
     sim.unpersist()
 
 
+def test_hamming_dense_value_space_rejects_string_ids(spark):
+    """The dense plan's cross kernel emits integer ids; string ids raise a
+    ValueError naming the type before any Spark job runs."""
+    from intelligent_log_analysis_anomaly_detection_tool_spark.operators.dedup import (
+        hamming_near_dup_pairs,
+    )
+
+    sim = spark.createDataFrame(
+        [("a", 1), ("b", 1), ("c", 3)], "doc_id string, simhash bigint"
+    )
+    sc = spark.sparkContext
+    sc.setJobGroup("hamming-string-ids", "no job expected")
+    try:
+        with pytest.raises(ValueError, match="string"):
+            hamming_near_dup_pairs(sim, max_hamming=3, fp_bits=16)
+        assert list(sc.statusTracker().getJobIdsForGroup("hamming-string-ids")) == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+
 def test_multimodal_plumbing(spark, docs):
     from intelligent_log_analysis_anomaly_detection_tool_spark.operators.multimodal import (
         attach_fake_media,

@@ -144,23 +144,21 @@ def test_chunked_with_turn_gaps_and_empty_buckets(spark, monkeypatch):
     assert got_map == want
 
 
-def test_unpersist_pattern_caches_frees_memo(spark, fixture_df):
-    """unpersist_pattern_caches releases every memoized _sig_base cache and
-    is idempotent (VERDICT r5 watch 3: the memo must not leak in long-lived
-    drivers that drop parsed frames without unpersisting)."""
+def test_pattern_operators_leave_no_cache(fixture_df, persistent_rdds):
+    """The pattern stage persists nothing: running pattern_anomalies and
+    pattern_stats adds no entry to Spark's persistent-RDD set."""
+    from intelligent_log_analysis_anomaly_detection_tool_spark.operators.detectors.pattern import (
+        pattern_anomalies,
+        pattern_stats,
+    )
+
     parsed = _parsed(fixture_df)
-    base = pattern_mod._sig_base_cached(parsed, __import__(
-        "intelligent_log_analysis_anomaly_detection_tool_spark.config",
-        fromlist=["PatternConfig"],
-    ).PatternConfig())
-    base.count()
-    assert base.storageLevel.useMemory  # cache is live
-    assert "_graft_sig_base_memo" in parsed.__dict__
-    released = pattern_mod.unpersist_pattern_caches(parsed)
-    assert released == 1
-    assert "_graft_sig_base_memo" not in parsed.__dict__
-    assert not base.storageLevel.useMemory  # StorageLevel.NONE after release
-    assert pattern_mod.unpersist_pattern_caches(parsed) == 0  # idempotent
+    before = persistent_rdds()
+    assert pattern_anomalies(parsed).collect()
+    stats = pattern_stats(parsed)
+    stats["stats"].collect()
+    stats["top_patterns"].collect()
+    assert persistent_rdds() - before == set()
 
 
 def _conv_frame(spark, conv_id, messages):

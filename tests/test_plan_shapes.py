@@ -94,34 +94,33 @@ def test_burst_single_exchange(spark, fixture_pdf):
     assert p.count("Exchange") == 1, p
 
 
-def test_pattern_kernel_reads_cached_base_in_place(spark, fixture_pdf):
-    """The gram kernel groups the persisted _sig_base by (conv_id, bucket),
-    which is the base's own hash partitioning and sort prefix: the final
-    plan has no Exchange or Sort between the cached-base scan and the Arrow
-    group kernel, and exactly one Exchange (the (conv_id, gh) merge of the
-    chunk partials) after it."""
+def test_pattern_kernel_reads_base_in_place(spark, fixture_pdf):
+    """The gram kernel groups _sig_base by (conv_id, bucket), which is the
+    base's own REPARTITION_BY_COL hash partitioning and sort prefix: the
+    final plan has exactly one Sort (the base's) and no Exchange between
+    that exchange and the Arrow group kernel, and exactly one Exchange (the
+    (conv_id, gh) merge of the chunk partials) after it."""
     from intelligent_log_analysis_anomaly_detection_tool_spark.functions.parse_select import (
         parse_stage,
     )
     from intelligent_log_analysis_anomaly_detection_tool_spark.operators.detectors.pattern import (
         sequence_counts,
-        unpersist_pattern_caches,
     )
     from intelligent_log_analysis_anomaly_detection_tool_spark.schema import (
         TRANSCRIPTS_SCHEMA,
     )
 
     fresh = spark.createDataFrame(fixture_pdf.head(800), schema=TRANSCRIPTS_SCHEMA)
-    parsed = parse_stage(fresh)
-    q = sequence_counts(parsed)
-    q.collect()  # the adaptive plan is final once the cached base is built
+    q = sequence_counts(parse_stage(fresh))
+    q.collect()  # the adaptive plan is final once every stage has run
     lines = _plan(q).splitlines()
-    unpersist_pattern_caches(parsed)
     kernel = next(i for i, l in enumerate(lines) if "FlatMapGroupsInArrow" in l)
-    scan = next(i for i, l in enumerate(lines) if "InMemoryTableScan" in l)
-    assert kernel < scan, lines
-    between = lines[kernel + 1:scan]
-    assert not [l for l in between if "Exchange" in l or "Sort" in l], lines
+    base = next(i for i, l in enumerate(lines)
+                if i > kernel and "REPARTITION_BY_COL" in l)
+    assert "Exchange hashpartitioning(conv_id" in lines[base], lines
+    between = lines[kernel + 1:base]
+    assert len([l for l in between if "Sort " in l]) == 1, lines
+    assert not [l for l in between if "Exchange" in l], lines
     above = [l for l in lines[:kernel] if "Exchange " in l]
     assert len(above) == 1 and "hashpartitioning" in above[0], lines
 
