@@ -460,14 +460,15 @@ FROM documents GROUP BY 1 ORDER BY n DESC, msg_hash LIMIT 10
 
 
 def q_dedup_exact(spark, sf_dir):
-    """Exact dedup: md5 over normalized text, group -> survivor + dup count."""
+    """Exact dedup: md5 over normalized text, group -> survivor + dup count.
+    Runs the engine's own dedup.exact_dedup, so the oracle pairing covers
+    it."""
     _utc(spark)
-    d = _documents(spark, sf_dir)
-    h = F.md5(F.lower(F.col("text")))
-    return d.select(h.alias("text_hash"), "doc_id").groupBy("text_hash").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.min("doc_id").alias("survivor_doc_id"),
+    from intelligent_log_analysis_anomaly_detection_tool_spark.operators.dedup import (
+        exact_dedup,
     )
+
+    return exact_dedup(_documents(spark, sf_dir))
 
 
 SQL_DEDUP_EXACT = """

@@ -22,7 +22,6 @@ class SpikeConfig:
     baseline_window_s: int = 600    # trailing baseline window
     min_current: int = 5            # isSpike: currentCount >= 5  (SpikeDetector.cpp:184-193)
     min_baseline: int = 10          # isSpike: baselineCount >= 10
-    max_samples: int = 5
 
 
 @dataclass(frozen=True)
@@ -40,7 +39,6 @@ class BurstConfig:
 
     window_s: int = 60
     min_repeats: int = 20
-    max_samples: int = 5
 
 
 @dataclass(frozen=True)
@@ -57,7 +55,6 @@ class TimeWindowConfig:
     window_s: int = 60
     error_rate_threshold: float = 0.5
     burst_threshold: int = 100
-    silence_threshold_s: int = 300
     max_history_windows: int = 12
 
 
@@ -77,7 +74,6 @@ class PatternConfig:
     """A9-A11 PatternAnalyzer knobs (include/analysis/PatternAnalyzer.hpp:139-141)."""
 
     sequence_window: int = 10
-    max_examples: int = 3
     prefix_words: int = 3           # createSignature first-3-words (PatternAnalyzer.cpp:176-193)
     prefix_trunc: int = 20          # sequenceToSignature substr(0,20) (PatternAnalyzer.cpp:195-206)
 
@@ -97,10 +93,6 @@ class PipelineConfig:
     # Faithful mode: rule matches contribute ZERO routed rows, exactly like the
     # reference where matchesToAnomalies returns {} (RuleBasedDetector.cpp:670-676).
     rules_faithful: bool = True
-
-    # Report sink caps (src/report/JsonReporter.cpp:19, CsvReporter.cpp:17)
-    json_max_anomalies: int = 100
-    csv_max_anomalies: int = 1000
 
 
 DEFAULT_CONFIG = PipelineConfig()

@@ -26,7 +26,9 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-LEVELS = ["trace", "debug", "info", "warn", "error", "critical", "unknown"]
+from . import schema
+
+LEVELS = [lv.lower() for lv in schema.LEVELS]
 PALETTE = ["#4878d0", "#ee854a", "#6acc64", "#d65f5f", "#956cb4",
            "#8c613c", "#dc7ec0", "#797979", "#d5bb67", "#82c6e2"]
 IP_RE = r"\b(?:\d{1,3}\.){3}\d{1,3}\b"

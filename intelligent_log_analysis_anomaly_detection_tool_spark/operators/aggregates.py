@@ -10,8 +10,9 @@ Attribution rules preserved:
   "now" when nothing parsed yet — nondeterministic, so this engine attributes
   those rows to a NULL minute instead; documented divergence)
 - the per-minute ``anomalies`` column counts ONLINE detector fires in the
-  triggering entry's bucket (main.cpp:291-359); offline (frequency/pattern/
-  timewindow) anomalies are never attributed to minutes
+  triggering entry's bucket (main.cpp:291-359), read as minute(window_end):
+  every online row stamps that entry's timestamp there; offline anomalies
+  (NULL turn_idx) and parser rows (NULL window) are never attributed
 - level stats' anomalyCount is bumped only for rule-based anomalies
   (main.cpp:286-288), which never fire in faithful mode -> always 0
 """
@@ -21,7 +22,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-LEVEL_KEYS = ["trace", "debug", "info", "warn", "error", "critical", "unknown"]
+from ..schema import LEVELS
+
+LEVEL_KEYS = [lv.lower() for lv in LEVELS]
 
 # bounded chunk for with_minute's prefix-scan decomposition (tests shrink it
 # to force the multi-chunk carry path)
@@ -86,9 +89,11 @@ def with_minute(parsed: DataFrame) -> DataFrame:
     )
 
 
-def minute_stats(parsed: DataFrame, online_anomalies: DataFrame | None = None) -> DataFrame:
-    """A1 per-minute level pivot (+ malformed, + online anomaly counts)."""
-    df = with_minute(parsed)
+def minute_stats(parsed: DataFrame, anomalies: DataFrame | None = None) -> DataFrame:
+    """A1 per-minute level pivot (+ malformed, + online anomaly counts).
+    Fires count in minute(window_end), with no join back to ``parsed``; only
+    online fires pass the filter, so the online union and the whole anomaly
+    union give the same pivot."""
     aggs = [
         F.count_if(~F.col("malformed")).alias("total"),
         *[
@@ -97,21 +102,13 @@ def minute_stats(parsed: DataFrame, online_anomalies: DataFrame | None = None) -
         ],
         F.count_if(F.col("malformed")).alias("malformed"),
     ]
-    base = df.groupBy("minute").agg(*aggs)
+    base = with_minute(parsed).groupBy("minute").agg(*aggs)
 
-    if online_anomalies is not None:
-        fires = (
-            online_anomalies.filter(F.col("turn_idx").isNotNull())
-            .groupBy("conv_id", "turn_idx")
-            .agg(F.count(F.lit(1)).alias("fires"))
-        )
-        row_minutes = df.filter(~F.col("malformed")).select(
-            "conv_id", "turn_idx", "minute"
-        )
+    if anomalies is not None:
         per_minute = (
-            fires.join(row_minutes, ["conv_id", "turn_idx"])
-            .groupBy("minute")
-            .agg(F.sum("fires").alias("anomalies"))
+            anomalies.filter(F.col("turn_idx").isNotNull() & F.col("window_end").isNotNull())
+            .groupBy(F.date_trunc("minute", F.col("window_end")).alias("minute"))
+            .agg(F.count(F.lit(1)).alias("anomalies"))
         )
         base = base.join(per_minute, "minute", "left").withColumn(
             "anomalies", F.coalesce(F.col("anomalies"), F.lit(0))

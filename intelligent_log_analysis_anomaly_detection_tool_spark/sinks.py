@@ -30,7 +30,7 @@ import time
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-LEVEL_NAMES = ["TRACE", "DEBUG", "INFO", "WARN", "ERROR", "CRITICAL", "UNKNOWN"]
+from .schema import LEVELS
 
 
 def console_report(result: dict, top_n: int = 5) -> str:
@@ -43,7 +43,7 @@ def console_report(result: dict, top_n: int = 5) -> str:
     lv = {r["level_ord"]: r["n"] for r in result["level_stats"].collect()}
     total = sum(lv.values())
     lines.append(f"Parsed entries: {total}")
-    for ord_, name in enumerate(LEVEL_NAMES):
+    for ord_, name in enumerate(LEVELS):
         n = lv.get(ord_, 0)
         if n:
             bar = "#" * max(1, int(40 * n / max(1, total)))
@@ -75,7 +75,7 @@ def parsed_turns_view(parsed: DataFrame) -> DataFrame:
     """S7: the entries sink projection (ISO timestamp, level name, source,
     message) — per-turn equality vs the oracle is asserted on this frame."""
     level_name = F.element_at(
-        F.array(*[F.lit(x) for x in LEVEL_NAMES]), F.col("level_ord") + 1
+        F.array(*[F.lit(x) for x in LEVELS]), F.col("level_ord") + 1
     )
     return parsed.filter(~F.col("malformed")).select(
         "conv_id",
@@ -131,11 +131,13 @@ def write_all(result: dict, routing: DataFrame, out_dir: str) -> dict:
         )
 
     def _w_json():
+        # top-100 cap: JsonReporter.cpp:19
         report_order(anomalies, 100).write.mode("overwrite").json(
             f"{out_dir}/report_json"
         )
 
     def _w_csv():
+        # top-1000 cap: CsvReporter.cpp:17
         report_order(anomalies, 1000).write.mode("overwrite").option(
             "header", True
         ).csv(f"{out_dir}/report_csv")

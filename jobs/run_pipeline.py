@@ -75,8 +75,13 @@ def main() -> None:
         )
 
         parsed = spark.read.parquet(os.path.join(args.output, "parsed_turns"))
+        # minute_stats keeps only the online fires of the routed anomalies
+        anomalies = spark.read.parquet(
+            os.path.join(args.output, "anomalies_routed")
+        )
         graphs = write_dashboard(
-            os.path.join(args.output, "graphs"), parsed, minute_stats(parsed)
+            os.path.join(args.output, "graphs"), parsed,
+            minute_stats(parsed, anomalies),
         )
 
     print(json.dumps({

@@ -42,6 +42,26 @@ def test_minute_stats(parsed_df, oracle_result):
     pd.testing.assert_frame_equal(got[cols], want[cols])
 
 
+def test_minute_stats_keeps_only_online_fires(parsed_df):
+    """The pivot filters the anomaly frame to online fires itself (offline
+    rows have no turn_idx, parser rows no window), so every anomaly gives
+    the same pivot as the online union."""
+    from intelligent_log_analysis_anomaly_detection_tool_spark.plans.pipeline import (
+        all_anomalies,
+        online_anomalies,
+    )
+
+    def pivot(anomalies):
+        return (
+            minute_stats(parsed_df, anomalies).toPandas()
+            .sort_values("minute", ignore_index=True, na_position="first")
+        )
+
+    online = pivot(online_anomalies(parsed_df))
+    assert online["anomalies"].sum() > 0
+    pd.testing.assert_frame_equal(pivot(all_anomalies(parsed_df)), online)
+
+
 def test_level_stats(parsed_df, oracle_result):
     got = (
         level_stats(parsed_df)

@@ -64,6 +64,39 @@ def _oracle_det(oracle_result, name):
     return a[a["detector"] == name].reset_index(drop=True)
 
 
+def test_online_fires_stamp_their_row_minute(parsed_df):
+    """Every timed online fire's window_end falls in the minute of the row it
+    fired on, and only parser rows have no window: the minute pivot counts
+    fires by minute(window_end) on this rule."""
+    from pyspark.sql import functions as F
+
+    from intelligent_log_analysis_anomaly_detection_tool_spark.operators.aggregates import (
+        with_minute,
+    )
+    from intelligent_log_analysis_anomaly_detection_tool_spark.plans.pipeline import (
+        online_anomalies,
+    )
+
+    online = online_anomalies(parsed_df)
+    untimed = online.filter(F.col("window_end").isNull())
+    untimed_detectors = untimed.select("detector").distinct().collect()
+    assert {r["detector"] for r in untimed_detectors} == {"parser"}
+
+    timed = online.filter(F.col("window_end").isNotNull())
+    rows = with_minute(parsed_df).filter(~F.col("malformed")).select(
+        "conv_id", "turn_idx", "minute"
+    )
+    same = F.date_trunc("minute", "window_end").eqNullSafe(F.col("minute"))
+    got = (
+        timed.join(rows, ["conv_id", "turn_idx"], "left")
+        .groupBy("detector", same.alias("same"))
+        .count()
+        .collect()
+    )
+    assert {r["detector"] for r in got} >= {"spike", "statistical", "burst", "rare_ip"}
+    assert all(r["same"] for r in got), got
+
+
 def test_rare_ip(parsed_df, oracle_result):
     from intelligent_log_analysis_anomaly_detection_tool_spark.operators.detectors.rare_ip import (
         rare_ip_anomalies,

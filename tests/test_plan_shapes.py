@@ -2,6 +2,8 @@
 (broadcast-only dim joins, merged window sorts, parquet pushdown, single
 parse evaluation) must not silently regress."""
 
+import re
+
 from pyspark.sql import functions as F
 
 
@@ -147,3 +149,36 @@ def test_parse_evaluated_once_in_spike(spark, fixture_pdf):
     if "InMemoryRelation" in p:  # another test cached an identical subtree
         return
     assert p.count("MapInArrow") == 1, p
+
+
+def test_minute_stats_reads_with_minute_once(spark, fixture_pdf):
+    """The minute pivot counts each online fire in its own window_end minute,
+    so with_minute's prefix scan (a local Window, a carry Window and the
+    carry join) is evaluated once and the only other join is the left join
+    of the per-minute fire counts: the final plan has exactly 2 Window
+    operators and 2 joins. The fires are a plain frame of the fixture's
+    real online rows, so the count covers the pivot's plan alone and the
+    fires match parsed rows (an unmatched join would be pruned by AQE)."""
+    from intelligent_log_analysis_anomaly_detection_tool_spark.functions.parse_select import (
+        parse_stage,
+    )
+    from intelligent_log_analysis_anomaly_detection_tool_spark.operators.aggregates import (
+        minute_stats,
+    )
+    from intelligent_log_analysis_anomaly_detection_tool_spark.plans.pipeline import (
+        online_anomalies,
+    )
+    from intelligent_log_analysis_anomaly_detection_tool_spark.schema import (
+        ANOMALY_SCHEMA,
+        TRANSCRIPTS_SCHEMA,
+    )
+
+    fresh = spark.createDataFrame(fixture_pdf, schema=TRANSCRIPTS_SCHEMA)
+    fires = spark.createDataFrame(
+        online_anomalies(parse_stage(fresh)).toPandas(), schema=ANOMALY_SCHEMA
+    )
+    q = minute_stats(parse_stage(fresh), fires)
+    q.collect()  # the adaptive plan is final once every stage has run
+    final = _plan(q).split("== Initial Plan ==")[0]
+    assert len(re.findall(r"\bWindow \[", final)) == 2, final
+    assert len(re.findall(r"\w+Join\b", final)) == 2, final
