@@ -11,7 +11,16 @@ resumable:
   under ``<out>/_checkpoints/`` recording its lineage: input rows, parsed,
   malformed, per-sink anomaly counts
 - sink data lands under ``bucket=<k>/`` subdirectories (a partition commit,
-  mirroring an Iceberg append per bucket)
+  mirroring an Iceberg append per bucket). This writer owns the layout:
+
+  - ``anomalies_routed/bucket=<k>/sink_name=<s>/`` — every anomaly,
+    J5-routed: the rows of ``sinks.write_all``'s ``anomalies_routed/``.
+    ``severity`` stays a data column here (not a directory level, as in
+    write_all) so that readers outside Spark get it as an integer; pyarrow
+    reads a hive partition column back as a dictionary
+  - ``parsed/bucket=<k>/`` — the full parse stage output, malformed rows
+    included (what ``jobs/run_pipeline.py --graphs`` reads back); not the
+    S7 ``parsed_turns/`` projection of ``sinks.write_all``
 - on resume, completed buckets are skipped by manifest lookup (the anti-join
   is against a tiny driver-side set, so it compiles to a pushed-down filter
   on the bucket column, not a shuffle)
@@ -79,7 +88,9 @@ def run_resumable(
     Returns {bucket: lineage} for the buckets processed in THIS invocation.
     """
     from .functions.parse_select import parse_stage
+    from .operators.enrich import dims
     from .plans.pipeline import all_anomalies
+    from .sinks import route_anomalies
 
     done = completed_buckets(out_dir)
     pending = [b for b in range(n_buckets) if b not in done]
@@ -116,7 +127,9 @@ def run_resumable(
             }
             # materialize routed sink data per bucket directory (partition
             # commit)
-            anomalies.write.mode("overwrite").partitionBy("bucket").parquet(
+            route_anomalies(anomalies, dims(spark)["routing"]).write.mode(
+                "overwrite"
+            ).partitionBy("bucket", "sink_name").parquet(
                 os.path.join(out_dir, "anomalies_routed")
             )
             anom_by_bucket: dict[int, dict[str, int]] = {}
@@ -127,7 +140,7 @@ def run_resumable(
             ):
                 anom_by_bucket.setdefault(r["bucket"], {})[r["detector"]] = r["n"]
             parsed.write.mode("overwrite").partitionBy("bucket").parquet(
-                os.path.join(out_dir, "parsed_turns")
+                os.path.join(out_dir, "parsed")
             )
         finally:
             anomalies.unpersist()

@@ -90,9 +90,5 @@ class PipelineConfig:
     frequency: FrequencyConfig = field(default_factory=FrequencyConfig)
     pattern: PatternConfig = field(default_factory=PatternConfig)
 
-    # Faithful mode: rule matches contribute ZERO routed rows, exactly like the
-    # reference where matchesToAnomalies returns {} (RuleBasedDetector.cpp:670-676).
-    rules_faithful: bool = True
-
 
 DEFAULT_CONFIG = PipelineConfig()

@@ -1,4 +1,4 @@
-"""Skew handling utilities (north rule: hot conversations).
+"""Skew handling (north rule: hot conversations).
 
 Three complementary mechanisms, used in this order of preference:
 
@@ -6,34 +6,14 @@ Three complementary mechanisms, used in this order of preference:
    key — (conv_id, source), (conv_id, burst_key-hash), (conv_id, ip) — so a
    hot conversation splits across sub-keys naturally.
 2. **Round-robin spreading** for per-row stages: per-row work (parse, n-gram
-   string building) carries no key at all; ``salted_repartition``/plain
-   ``repartition()`` distributes it evenly regardless of input layout.
+   string building) carries no key at all; ``spread_small_scan`` spreads a
+   scan narrower than the core count evenly regardless of input layout.
 3. **AQE** (enabled in session.py): runtime skew-join splitting and
-   partition coalescing for whatever remains.
-
-``salted_repartition`` is the explicit middle tool: it repartitions by
-``hash(key, salt)`` so rows of one hot key spread over ``salt_n`` partitions
-while co-locating everything else. Safe ONLY for stages whose semantics
-don't need all rows of a key together (per-row transforms, algebraic
-partial aggregations)."""
+   partition coalescing for whatever remains."""
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-
-
-def salted_repartition(df: DataFrame, key: str, salt_n: int = 16,
-                       num_partitions: int | None = None) -> DataFrame:
-    """Repartition by (key, salt) with salt = pmod(xxhash64(all columns), n)
-    — deterministic, no rand() (rand would break retry/resume determinism)."""
-    salt = F.pmod(F.xxhash64(*[F.col(c) for c in df.columns]), F.lit(salt_n))
-    out = df.withColumn("_salt", salt)
-    if num_partitions:
-        out = out.repartition(num_partitions, F.col(key), F.col("_salt"))
-    else:
-        out = out.repartition(F.col(key), F.col("_salt"))
-    return out.drop("_salt")
 
 
 def spread_small_scan(df: DataFrame) -> DataFrame:
@@ -50,18 +30,3 @@ def spread_small_scan(df: DataFrame) -> DataFrame:
     if df.rdd.getNumPartitions() < p:
         return df.repartition(p)
     return df
-
-
-def skew_report(df: DataFrame, key: str, top_n: int = 5):
-    """Measure key skew: top-N heaviest keys and their share of all rows —
-    the number BENCH.md quotes for the hot-conversation fixture."""
-    counts = df.groupBy(key).agg(F.count(F.lit(1)).alias("n"))
-    total = df.count()
-    top = counts.orderBy(F.desc("n")).limit(top_n).collect()
-    return {
-        "total_rows": total,
-        "top_keys": [
-            {"key": r[key], "rows": r["n"], "share": round(r["n"] / total, 4)}
-            for r in top
-        ],
-    }

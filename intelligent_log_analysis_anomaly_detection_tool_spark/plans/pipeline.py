@@ -24,7 +24,7 @@ from ..operators.detectors.online_fused import spike_statistical_anomalies
 from ..operators.detectors.pattern import pattern_anomalies, pattern_stats
 from ..operators.detectors.rare_ip import rare_ip_anomalies
 from ..operators.detectors.timewindow import timewindow_anomalies
-from ..operators.enrich import dims, enrich, rule_matches
+from ..operators.enrich import dims, enrich
 
 
 def parser_anomalies(parsed: DataFrame) -> DataFrame:
@@ -51,47 +51,17 @@ def parser_anomalies(parsed: DataFrame) -> DataFrame:
     return as_anomaly(out)
 
 
-def rule_anomalies(parsed: DataFrame, rules: DataFrame) -> DataFrame:
-    """EXTENDED mode only: convert rule matches into anomaly rows. The
-    reference's matchesToAnomalies is a placeholder returning {} — faithful
-    mode therefore contributes ZERO rows (F9) and this function is wired in
-    only when cfg.rules_faithful is False. Severity/score come from the rule
-    row; type Other; window [ts, ts]."""
-    matches = rule_matches(parsed, rules)
-    enriched = matches.join(F.broadcast(rules), "rule_id").join(
-        parsed.select("conv_id", "turn_idx", "ts_parsed", "source"),
-        ["conv_id", "turn_idx"],
-    )
-    out = enriched.select(
-        "conv_id",
-        "turn_idx",
-        F.lit("rules").alias("detector"),
-        F.lit(T_OTHER).alias("anomaly_type"),
-        F.col("severity"),
-        F.col("ts_parsed").alias("window_start"),
-        F.col("ts_parsed").alias("window_end"),
-        F.col("rule_score").alias("score"),
-        F.col("source"),
-        F.concat(F.lit("Rule matched: "), F.col("name")).alias("description"),
-    )
-    return as_anomaly(out)
-
-
-def online_anomalies(parsed: DataFrame, cfg: PipelineConfig = DEFAULT_CONFIG,
-                     rules: DataFrame | None = None) -> DataFrame:
-    """Per-entry detector fires (rule stage contributes zero rows in faithful
-    mode, F9). Union order mirrors main.cpp:283-360; W1+W2 run as ONE fused
-    window pass (they share the (conv_id, source) sort — see
-    detectors/online_fused.py)."""
-    out = (
+def online_anomalies(parsed: DataFrame, cfg: PipelineConfig = DEFAULT_CONFIG) -> DataFrame:
+    """Per-entry detector fires. Rule matches contribute no rows (F9): the
+    reference's matchesToAnomalies returns {} (RuleBasedDetector.cpp:670-676).
+    Union order mirrors main.cpp:283-360; W1+W2 run as ONE fused window pass
+    (they share the (conv_id, source) sort — see detectors/online_fused.py)."""
+    return (
         parser_anomalies(parsed)
         .unionByName(spike_statistical_anomalies(parsed, cfg.spike, cfg.statistical))
         .unionByName(burst_anomalies(parsed, cfg.burst))
         .unionByName(rare_ip_anomalies(parsed, cfg.ip))
     )
-    if not cfg.rules_faithful and rules is not None:
-        out = rule_anomalies(parsed, rules).unionByName(out)
-    return out
 
 
 def offline_anomaly_builders(parsed: DataFrame, cfg: PipelineConfig = DEFAULT_CONFIG):

@@ -62,7 +62,6 @@ def all_operators() -> list[Op]:
         Op("timewindow_anomalies", ("W5",), timewindow.timewindow_anomalies,
            "duckdb+oracle"),
         Op("parser_anomalies", ("F2",), pipeline.parser_anomalies, "oracle"),
-        Op("rule_anomalies_extended", ("F9",), pipeline.rule_anomalies, "pytest"),
         Op("report_order", ("O1", "O2", "O3"), pipeline.report_order,
            "duckdb+binary"),
         Op("run_pipeline", ("§3.1",), pipeline.run_pipeline, "oracle"),
@@ -74,7 +73,7 @@ def all_operators() -> list[Op]:
         Op("run_resumable", ("checkpoint",), checkpoint.run_resumable, "pytest"),
         Op("streaming_minute_counts", ("streaming",),
            streaming_pipeline.streaming_minute_counts, "pytest"),
-        Op("streaming_burst", ("W3-streaming",),
+        Op("streaming_burst", ("streaming",),
            streaming_pipeline.streaming_burst, "oracle"),
         Op("exact_dedup", ("dedup",), dedup.exact_dedup, "duckdb"),
         Op("dedup_keep_first", ("dedup",), dedup.dedup_keep_first, "pytest"),

@@ -14,6 +14,11 @@ Physical layout under ``out_dir``:
 - ``report_csv/``          S5 top-1000 anomalies as CSV
 - ``run_metrics.json``     S8 benchmark counters (main.cpp:586-608)
 
+That layout is ``write_all``'s. The resumable job (checkpoint.py) owns a
+different one: the same routed ``anomalies_routed/`` rows partitioned by
+``bucket`` and ``sink_name``, the full parse under ``parsed/``, and
+manifests under ``_checkpoints/``; it writes no ``parsed_turns/``.
+
 Storage backend: parquet directories (atomic-enough via Spark's commit
 protocol). On a cluster with Iceberg jars available the same writes map to
 ``df.writeTo(table).append()`` — the layout above mirrors an Iceberg

@@ -5,7 +5,9 @@ Cluster usage (north rule deployment shape):
     zip -r engine.zip intelligent_log_analysis_anomaly_detection_tool_spark oracle
     spark-submit --py-files engine.zip jobs/run_pipeline.py \
         --input <iceberg-table-or-parquet-dir> --output out/ \
-        --buckets 64 [--resume] [--synth N_CONVS]
+        --buckets 64 [--synth N_CONVS]
+
+A re-run on the same --output resumes from the bucket manifests.
 
 Local sandbox usage:
 
@@ -28,8 +30,6 @@ def main() -> None:
     ap.add_argument("--synth", type=int, help="synthesize N conversations instead")
     ap.add_argument("--output", required=True)
     ap.add_argument("--buckets", type=int, default=8)
-    ap.add_argument("--resume", action="store_true",
-                    help="(informational) resume is automatic via manifests")
     ap.add_argument("--graphs", action="store_true",
                     help="render the S9 dashboard (12 SVG charts + index.html) "
                          "into <output>/graphs from the written sinks")
@@ -74,8 +74,8 @@ def main() -> None:
             minute_stats,
         )
 
-        parsed = spark.read.parquet(os.path.join(args.output, "parsed_turns"))
-        # minute_stats keeps only the online fires of the routed anomalies
+        parsed = spark.read.parquet(os.path.join(args.output, "parsed"))
+        # minute_stats keeps only the online fires of the anomalies
         anomalies = spark.read.parquet(
             os.path.join(args.output, "anomalies_routed")
         )

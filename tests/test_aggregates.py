@@ -190,3 +190,46 @@ def test_with_minute_chunked_carry(spark, monkeypatch):
     exp["minute"] = own.groupby(exp["conv_id"]).ffill()
     pd.testing.assert_series_equal(
         got["minute"], exp["minute"], check_names=False)
+
+
+def test_console_report(parsed_df, oracle_result):
+    """S3: the per-level lines carry the A2 level counts, and the top-N
+    anomaly lines are the first N rows in O1 report order."""
+    from intelligent_log_analysis_anomaly_detection_tool_spark.plans.pipeline import (
+        all_anomalies,
+    )
+    from intelligent_log_analysis_anomaly_detection_tool_spark.schema import LEVELS
+    from intelligent_log_analysis_anomaly_detection_tool_spark.sinks import (
+        console_report,
+    )
+
+    text = console_report({
+        "level_stats": level_stats(parsed_df),
+        "source_stats": source_stats(parsed_df),
+        "anomalies": all_anomalies(parsed_df),
+    }, top_n=5)
+    lines = text.split("\n")
+
+    want_levels = {
+        LEVELS[int(r.level_ord)]: int(r.n)
+        for r in oracle_result["level_stats"].itertuples()
+    }
+    start = lines.index(f"Parsed entries: {sum(want_levels.values())}") + 1
+    got_levels = {}
+    for line in lines[start:lines.index("-" * 60)]:
+        name, n, _bar = line.split()
+        got_levels[name] = int(n)
+    assert got_levels == want_levels
+
+    top = oracle_result["anomalies"].sort_values(
+        ["severity", "score", "window_end", "description"],
+        ascending=[False, False, False, True],
+    ).head(5)
+    want_top = [
+        f"  [sev={r.severity}] {r.detector:<12} score={r.score:.2f} "
+        f"{r.description[:70]}"
+        for r in top.itertuples()
+    ]
+    start = lines.index("Top 5 anomalies:") + 1
+    assert lines[start:start + 5] == want_top
+    assert lines[start + 5] == "=" * 60

@@ -155,37 +155,23 @@ def test_threshold_rule_out_of_order_timestamps(spark):
     assert set(zip(got["conv_id"], got["turn_idx"])) == {("ooo", 3)}
 
 
-def test_extended_rules_mode(spark, fixture_df, oracle_result):
-    """rules_faithful=False wires rule matches into the online anomaly union;
-    faithful mode (default) contributes zero rows (F9)."""
-    import dataclasses
+def test_faithful_rules_add_no_rows(fixture_df):
+    """F9: the reference's matchesToAnomalies returns {}, so rule matches
+    never reach the anomaly union; online_anomalies takes no rules at all."""
+    import inspect
 
-    from intelligent_log_analysis_anomaly_detection_tool_spark.config import (
-        DEFAULT_CONFIG,
-    )
     from intelligent_log_analysis_anomaly_detection_tool_spark.functions.parse_select import (
         parse_stage,
-    )
-    from intelligent_log_analysis_anomaly_detection_tool_spark.operators.enrich import (
-        dims,
     )
     from intelligent_log_analysis_anomaly_detection_tool_spark.plans.pipeline import (
         online_anomalies,
     )
 
-    parsed = parse_stage(fixture_df)
-    rules = dims(spark)["rules"]
-
-    faithful = online_anomalies(parsed, DEFAULT_CONFIG, rules)
-    assert faithful.filter("detector = 'rules'").count() == 0
-
-    ext_cfg = dataclasses.replace(DEFAULT_CONFIG, rules_faithful=False)
-    ext = online_anomalies(parsed, ext_cfg, rules).filter("detector = 'rules'")
-    got = ext.toPandas()
-    po = oracle_result["parsed"]
-    ok = po[~po["malformed"]]
-    want_err = int(ok["message"].str.upper().str.contains("ERROR", regex=False).sum())
-    want_crit = int(ok["message"].str.upper().str.contains("CRITICAL", regex=False).sum())
-    assert len(got) == want_err + want_crit
-    assert set(got["description"]) <= {"Rule matched: error_keyword",
-                                       "Rule matched: critical_keyword"}
+    assert list(inspect.signature(online_anomalies).parameters) == ["parsed", "cfg"]
+    detectors = {
+        r["detector"]
+        for r in online_anomalies(parse_stage(fixture_df))
+        .select("detector").distinct().collect()
+    }
+    assert "rules" not in detectors
+    assert {"parser", "burst"} <= detectors
