@@ -8,7 +8,7 @@ Methodology (cold-JVM, VERDICT r2 item 2):
 
 - ``pipeline_total`` (the headline) is the full parse->enrich->route->
   aggregate pipeline with the two post-parse branches submitted concurrently
-  (the engine's real DAG — what sinks.write_all and bench/scaling.py run),
+  (the engine's real DAG — what bench/scaling.py runs),
   measured in a FRESH child JVM so no prior pass has warmed the JIT or left
   the parsed frame cached. Input preparation (rendering + persist + count of
   the transcript frame) happens before the timer, same as the parent pass.

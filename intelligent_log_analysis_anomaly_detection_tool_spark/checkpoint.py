@@ -9,18 +9,17 @@ resumable:
 
 - each completed bucket commits a manifest JSON (atomic write-then-rename)
   under ``<out>/_checkpoints/`` recording its lineage: input rows, parsed,
-  malformed, per-sink anomaly counts
-- sink data lands under ``bucket=<k>/`` subdirectories (a partition commit,
-  mirroring an Iceberg append per bucket). This writer owns the layout:
-
-  - ``anomalies_routed/bucket=<k>/sink_name=<s>/`` — every anomaly,
-    J5-routed: the rows of ``sinks.write_all``'s ``anomalies_routed/``.
-    ``severity`` stays a data column here (not a directory level, as in
-    write_all) so that readers outside Spark get it as an integer; pyarrow
-    reads a hive partition column back as a dictionary
-  - ``parsed/bucket=<k>/`` — the full parse stage output, malformed rows
-    included (what ``jobs/run_pipeline.py --graphs`` reads back); not the
-    S7 ``parsed_turns/`` projection of ``sinks.write_all``
+  malformed, per-detector anomaly counts
+- its data lands under ``bucket=<k>/`` subdirectories of
+  ``anomalies_routed/`` (partitioned by ``bucket`` and ``sink_name``) and
+  ``parsed/`` (a partition commit, mirroring an Iceberg append per bucket);
+  the two writes overwrite dynamically, so only the batch's own bucket
+  directories are replaced
+- after the last batch, ``sinks.write_run_sinks`` reads both back once and
+  writes the run-level sinks, ``run_metrics.json`` last. It runs when this
+  invocation committed a bucket or ``run_metrics.json`` is missing, so a
+  crash after the last manifest is repaired on resume and a no-op resume
+  writes nothing. ``sinks.py`` documents the whole layout
 - on resume, completed buckets are skipped by manifest lookup (the anti-join
   is against a tiny driver-side set, so it compiles to a pushed-down filter
   on the bucket column, not a shuffle)
@@ -34,12 +33,13 @@ from __future__ import annotations
 
 import json
 import os
-import tempfile
+import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .config import DEFAULT_CONFIG, PipelineConfig
+from .sinks import RUN_METRICS, route_anomalies, write_json_atomic, write_run_sinks
 
 
 def with_bucket(transcripts: DataFrame, n_buckets: int) -> DataFrame:
@@ -63,13 +63,12 @@ def completed_buckets(out_dir: str) -> set[int]:
     return out
 
 
+def _manifest_path(out_dir: str, bucket: int) -> str:
+    return os.path.join(_manifest_dir(out_dir), f"bucket-{bucket}.json")
+
+
 def _commit_manifest(out_dir: str, bucket: int, lineage: dict) -> None:
-    d = _manifest_dir(out_dir)
-    os.makedirs(d, exist_ok=True)
-    fd, tmp = tempfile.mkstemp(dir=d, suffix=".tmp")
-    with os.fdopen(fd, "w") as fh:
-        json.dump(lineage, fh, indent=2)
-    os.replace(tmp, os.path.join(d, f"bucket-{bucket}.json"))
+    write_json_atomic(_manifest_path(out_dir, bucket), lineage)
 
 
 def run_resumable(
@@ -82,25 +81,20 @@ def run_resumable(
     fail_after_buckets: int | None = None,
 ) -> dict:
     """Process the table bucket-batch by bucket-batch, committing a manifest
-    per completed bucket. Re-invoking after a crash resumes from the first
-    uncommitted bucket. ``fail_after_buckets`` injects a crash for tests.
+    per completed bucket, then write the run-level sinks. Re-invoking after a
+    crash resumes from the first uncommitted bucket. ``fail_after_buckets``
+    injects a crash for tests.
 
     Returns {bucket: lineage} for the buckets processed in THIS invocation.
     """
     from .functions.parse_select import parse_stage
-    from .operators.enrich import dims
     from .plans.pipeline import all_anomalies
-    from .sinks import route_anomalies
 
+    started = time.time()
     done = completed_buckets(out_dir)
     pending = [b for b in range(n_buckets) if b not in done]
     processed: dict[int, dict] = {}
     n_done_this_run = 0
-
-    # dynamic partition overwrite makes bucket re-processing idempotent: a
-    # bucket whose data landed but whose manifest did not commit (crash in
-    # between) is simply overwritten on resume — exactly-once per bucket.
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
 
     bt = with_bucket(transcripts, n_buckets)
 
@@ -126,9 +120,13 @@ def run_resumable(
                 .collect()
             }
             # materialize routed sink data per bucket directory (partition
-            # commit)
-            route_anomalies(anomalies, dims(spark)["routing"]).write.mode(
-                "overwrite"
+            # commit). Dynamic partition overwrite, set per write so the
+            # session keeps its own mode, makes bucket re-processing
+            # idempotent: a bucket whose data landed but whose manifest did
+            # not commit (crash in between) is simply overwritten on resume,
+            # exactly-once per bucket.
+            route_anomalies(anomalies).write.mode("overwrite").option(
+                "partitionOverwriteMode", "dynamic"
             ).partitionBy("bucket", "sink_name").parquet(
                 os.path.join(out_dir, "anomalies_routed")
             )
@@ -139,9 +137,9 @@ def run_resumable(
                 .collect()
             ):
                 anom_by_bucket.setdefault(r["bucket"], {})[r["detector"]] = r["n"]
-            parsed.write.mode("overwrite").partitionBy("bucket").parquet(
-                os.path.join(out_dir, "parsed")
-            )
+            parsed.write.mode("overwrite").option(
+                "partitionOverwriteMode", "dynamic"
+            ).partitionBy("bucket").parquet(os.path.join(out_dir, "parsed"))
         finally:
             anomalies.unpersist()
             parsed.unpersist()
@@ -160,4 +158,10 @@ def run_resumable(
             if fail_after_buckets is not None and n_done_this_run >= fail_after_buckets:
                 raise RuntimeError(f"injected failure after {n_done_this_run} buckets")
 
+    if processed or not os.path.isfile(os.path.join(out_dir, RUN_METRICS)):
+        manifests = []
+        for b in range(n_buckets):
+            with open(_manifest_path(out_dir, b)) as fh:
+                manifests.append(json.load(fh))
+        write_run_sinks(spark, out_dir, manifests, started)
     return processed

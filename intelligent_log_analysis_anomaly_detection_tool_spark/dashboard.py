@@ -22,6 +22,7 @@ from __future__ import annotations
 import html
 import math
 import os
+import sys
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -363,7 +364,8 @@ def render_dashboard(out_dir: str, aggs: dict) -> list[str]:
              line_chart("Isolation Forest Anomaly Score", minutes,
                         [("score", score)]))
     except ImportError:
-        print("Skipping Isolation Forest chart: scikit-learn not installed.")
+        print("Skipping Isolation Forest chart: scikit-learn not installed.",
+              file=sys.stderr)
 
     imgs = "\n".join(
         f'<div class="card"><h3>{_esc(n)}</h3>'

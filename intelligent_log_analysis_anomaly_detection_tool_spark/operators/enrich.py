@@ -20,8 +20,7 @@ from pyspark.sql import functions as F
 
 from ..schema import (
     DIM_ROLE_ROWS, DIM_ROLE_SCHEMA, DIM_SEVERITY_ROWS, DIM_SEVERITY_SCHEMA,
-    DIM_TOOL_ROWS, DIM_TOOL_SCHEMA, ROUTING_ROWS, ROUTING_SCHEMA, RULES_ROWS,
-    RULES_SCHEMA,
+    DIM_TOOL_ROWS, DIM_TOOL_SCHEMA, RULES_ROWS, RULES_SCHEMA,
 )
 
 
@@ -31,7 +30,6 @@ def dims(spark: SparkSession) -> dict[str, DataFrame]:
         "dim_role": spark.createDataFrame(DIM_ROLE_ROWS, DIM_ROLE_SCHEMA),
         "dim_tool": spark.createDataFrame(DIM_TOOL_ROWS, DIM_TOOL_SCHEMA),
         "rules": spark.createDataFrame(RULES_ROWS, RULES_SCHEMA),
-        "routing": spark.createDataFrame(ROUTING_ROWS, ROUTING_SCHEMA),
     }
 
 

@@ -1,30 +1,30 @@
-"""The full parse -> enrich -> route -> aggregate plan.
+"""The detector DAG: parse -> detector branches -> anomaly union.
 
 Spark lifecycle of the reference's single-threaded loop (SURVEY.md §3.1):
-read -> parse (one mapInArrow stage) -> enrich (broadcast joins) -> detector
-branches (window exprs, burst's mapInPandas scan, pattern's applyInArrow
-kernel) -> unionByName -> routing join -> fan-out sinks; aggregates (minute
-pivot, level/source stats) are sibling branches over the same cached parsed
-frame — no second parse pass (the reference re-reads the file for
-entries.csv, main.cpp:536-537; we persist).
+read -> parse (one mapInArrow stage) -> detector branches (window exprs,
+burst's mapInPandas scan, pattern's applyInArrow kernel) -> unionByName.
+Every branch reads one persisted parsed frame — no second parse pass (the
+reference re-reads the file for entries.csv, main.cpp:536-537).
+``checkpoint.run_resumable`` runs this per bucket batch and routes the union
+(J5) into the sinks; ``run_concurrent_dag`` runs it with the minute pivot as
+a sibling branch.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..config import DEFAULT_CONFIG, PipelineConfig
 from ..functions.parse_select import parse_stage_pipeline
-from ..operators.aggregates import level_stats, minute_stats, source_stats, totals
+from ..operators.aggregates import minute_stats
 from ..operators.detectors.burst import burst_anomalies
 from ..operators.detectors.common import S_LOW, T_OTHER, as_anomaly
-from ..operators.detectors.frequency import frequency_anomalies, frequency_stats
+from ..operators.detectors.frequency import frequency_anomalies
 from ..operators.detectors.online_fused import spike_statistical_anomalies
-from ..operators.detectors.pattern import pattern_anomalies, pattern_stats
+from ..operators.detectors.pattern import pattern_anomalies
 from ..operators.detectors.rare_ip import rare_ip_anomalies
 from ..operators.detectors.timewindow import timewindow_anomalies
-from ..operators.enrich import dims, enrich
 
 
 def parser_anomalies(parsed: DataFrame) -> DataFrame:
@@ -172,47 +172,3 @@ def report_order(anomalies: DataFrame, limit: int | None = None) -> DataFrame:
     )
     return out.limit(limit) if limit else out
 
-
-def run_pipeline(
-    spark: SparkSession,
-    transcripts: DataFrame,
-    cfg: PipelineConfig = DEFAULT_CONFIG,
-    out_dir: str | None = None,
-) -> dict[str, DataFrame]:
-    """Build (and optionally materialize) every branch of the DAG.
-
-    Returns the dict of logical DataFrames; when ``out_dir`` is given the
-    routed anomaly fan-out and the report sinks are also written (see
-    sinks.write_all for the physical layout).
-    """
-    d = dims(spark)
-    # Narrowed parse (parse_stage_pipeline): raw text/ts/was_json never reach
-    # the cache — no branch below reads them, and at 1e8+ rows raw text alone
-    # would double the persisted footprint (= per-task memory pressure at
-    # high parallelism on a fixed executor heap).
-    parsed = parse_stage_pipeline(transcripts)
-    parsed = parsed.persist()
-
-    online = online_anomalies(parsed, cfg)
-    offline = offline_anomalies(parsed, cfg)
-    anomalies = online.unionByName(offline)
-
-    result = {
-        "parsed": parsed,
-        "enriched": enrich(parsed, d),
-        "online_anomalies": online,
-        "offline_anomalies": offline,
-        "anomalies": anomalies,
-        "minute_stats": minute_stats(parsed, online),
-        "level_stats": level_stats(parsed),
-        "source_stats": source_stats(parsed),
-        "totals": totals(source_stats(parsed)),
-        "frequency_stats": frequency_stats(parsed, cfg.frequency),
-        "pattern_stats": pattern_stats(parsed, cfg.pattern),
-        "dims": d,
-    }
-    if out_dir is not None:
-        from ..sinks import write_all
-
-        result["sink_counts"] = write_all(result, d["routing"], out_dir)
-    return result

@@ -64,13 +64,14 @@ def all_operators() -> list[Op]:
         Op("parser_anomalies", ("F2",), pipeline.parser_anomalies, "oracle"),
         Op("report_order", ("O1", "O2", "O3"), pipeline.report_order,
            "duckdb+binary"),
-        Op("run_pipeline", ("§3.1",), pipeline.run_pipeline, "oracle"),
         Op("console_report", ("S3",), sinks.console_report, "pytest"),
         Op("parsed_turns_view", ("S7",), sinks.parsed_turns_view, "binary-diff"),
         Op("route_anomalies", ("J5", "S5"), sinks.route_anomalies, "oracle"),
-        Op("write_all", ("S4", "S5", "S6", "S8"), sinks.write_all, "oracle"),
+        Op("write_run_sinks", ("S4", "S5", "S6", "S8"), sinks.write_run_sinks,
+           "oracle"),
         Op("write_dashboard", ("S9",), dashboard.write_dashboard, "pytest"),
-        Op("run_resumable", ("checkpoint",), checkpoint.run_resumable, "pytest"),
+        Op("run_resumable", ("§3.1", "checkpoint"), checkpoint.run_resumable,
+           "oracle"),
         Op("streaming_minute_counts", ("streaming",),
            streaming_pipeline.streaming_minute_counts, "pytest"),
         Op("streaming_burst", ("streaming",),

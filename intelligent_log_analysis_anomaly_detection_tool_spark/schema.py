@@ -1,4 +1,4 @@
-"""Schemas, enums and broadcast dimension data.
+"""Schemas, enums and dimension data.
 
 Enum ordinals mirror the reference exactly:
   - LogLevel   {Trace=0,Debug=1,Info=2,Warn=3,Error=4,Critical=5,Unknown=6}
@@ -76,7 +76,7 @@ ANOMALY_SCHEMA = T.StructType(
 
 ANOMALY_COLS = [f.name for f in ANOMALY_SCHEMA.fields]
 
-# --- broadcast dimension data (J1-J3, J5) ------------------------------------
+# --- dimension data (J1-J5) --------------------------------------------------
 
 # J1 severity dim: level ordinal -> name + routing bucket.
 DIM_SEVERITY_ROWS = [
@@ -120,15 +120,15 @@ RULES_SCHEMA = (
     "rule_score DOUBLE, severity INT, enabled BOOLEAN"
 )
 
-# J5 sink-routing: (detector) -> sink name; severity refines the bucket.
-ROUTING_ROWS = [
-    ("parser", "sink_malformed"),
-    ("spike", "sink_spike"),
-    ("statistical", "sink_statistical"),
-    ("burst", "sink_burst"),
-    ("rare_ip", "sink_rare_ip"),
-    ("frequency", "sink_offline"),
-    ("pattern", "sink_offline"),
-    ("timewindow", "sink_offline"),
-]
-ROUTING_SCHEMA = "detector STRING, sink_name STRING"
+# J5 sink routing: detector -> sink name (a literal map, no join); a
+# detector missing here routes to "sink_other".
+ROUTING = {
+    "parser": "sink_malformed",
+    "spike": "sink_spike",
+    "statistical": "sink_statistical",
+    "burst": "sink_burst",
+    "rare_ip": "sink_rare_ip",
+    "frequency": "sink_offline",
+    "pattern": "sink_offline",
+    "timewindow": "sink_offline",
+}

@@ -1,28 +1,29 @@
-"""S3-S8 sinks: routed anomaly fan-out, per-turn entries, time series, reports.
+"""S3-S8 sinks: console report, routed anomalies, entries, time series,
+reports and run counters.
 
-Physical layout under ``out_dir``:
+One writer, ``checkpoint.run_resumable``, lays out ``out_dir``:
 
-- ``parsed_turns/``        S7 entries sink (the per-turn text-equality
-                           invariant lives here): conv_id, turn_idx, ts_iso,
-                           level_name, source, message (main.cpp:525-584)
-- ``anomalies_routed/``    S5 fan-out: ONE pass, hive-partitioned by
-                           sink_name (J5 routing join) and severity — a
-                           directory per (detector-sink, severity) instead of
-                           N separate jobs
+- ``_checkpoints/bucket-<k>.json``  per-bucket lineage manifests
+- ``anomalies_routed/bucket=<k>/sink_name=<s>/``  S5 fan-out: every
+                           anomaly, J5-routed (``route_anomalies``), written
+                           per bucket batch; ``severity`` stays a data
+                           column, since pyarrow reads a hive partition
+                           column back as a dictionary, not an integer
+- ``parsed/bucket=<k>/``   the full parse output, malformed rows included;
+                           S7, the entries sink (main.cpp:525-584), is the
+                           ``parsed_turns_view`` projection over it
 - ``timeseries_minute/``   S6 per-minute pivot (main.cpp:500-523)
-- ``report_json/``         S4 top-100 anomalies by report order
+- ``report_json/``         S4 top-100 anomalies in O1 report order
 - ``report_csv/``          S5 top-1000 anomalies as CSV
-- ``run_metrics.json``     S8 benchmark counters (main.cpp:586-608)
+- ``run_metrics.json``     S8 run counters (main.cpp:586-608), written last
 
-That layout is ``write_all``'s. The resumable job (checkpoint.py) owns a
-different one: the same routed ``anomalies_routed/`` rows partitioned by
-``bucket`` and ``sink_name``, the full parse under ``parsed/``, and
-manifests under ``_checkpoints/``; it writes no ``parsed_turns/``.
+The last four are run-level: ``write_run_sinks`` builds them from what the
+bucket batches wrote, after the last batch.
 
 Storage backend: parquet directories (atomic-enough via Spark's commit
 protocol). On a cluster with Iceberg jars available the same writes map to
-``df.writeTo(table).append()`` — the layout above mirrors an Iceberg
-partition spec (sink_name, severity), so switching backends is a writer-only
+``df.writeTo(table).append()`` — the routed layout mirrors an Iceberg
+partition spec (bucket, sink_name), so switching backends is a writer-only
 change.
 """
 
@@ -30,12 +31,15 @@ from __future__ import annotations
 
 import json
 import os
+import tempfile
 import time
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from .schema import LEVELS
+from .operators.aggregates import minute_stats
+from .schema import ANOMALY_COLS, ANOMALY_SCHEMA, LEVELS, ROUTING
 
 
 def console_report(result: dict, top_n: int = 5) -> str:
@@ -92,88 +96,86 @@ def parsed_turns_view(parsed: DataFrame) -> DataFrame:
     )
 
 
-def route_anomalies(anomalies: DataFrame, routing: DataFrame) -> DataFrame:
-    """J5: broadcast routing join; unmatched detectors fall back to a default
-    sink so no anomaly is ever dropped by routing."""
-    return anomalies.join(F.broadcast(routing), "detector", "left").withColumn(
-        "sink_name", F.coalesce(F.col("sink_name"), F.lit("sink_other"))
+def route_anomalies(anomalies: DataFrame) -> DataFrame:
+    """J5: ``sink_name`` is a lookup in the literal ``ROUTING`` map, not a
+    join; a detector missing from it falls back to ``sink_other``, so
+    routing never drops an anomaly. ``detector`` leads the columns: the
+    schema readers of ``anomalies_routed/`` already have."""
+    routing = F.create_map(*[F.lit(x) for kv in ROUTING.items() for x in kv])
+    return anomalies.select(
+        "detector",
+        *[c for c in anomalies.columns if c != "detector"],
+        F.coalesce(routing[F.col("detector")], F.lit("sink_other")).alias("sink_name"),
     )
 
 
-def write_all(result: dict, routing: DataFrame, out_dir: str) -> dict:
-    os.makedirs(out_dir, exist_ok=True)
-    t0 = time.time()
+def write_json_atomic(path: str, obj) -> None:
+    """Write-then-rename: a reader sees no file or the whole file."""
+    d = os.path.dirname(path)
+    os.makedirs(d, exist_ok=True)
+    fd, tmp = tempfile.mkstemp(dir=d, suffix=".tmp")
+    with os.fdopen(fd, "w") as fh:
+        json.dump(obj, fh, indent=2)
+    os.replace(tmp, path)
 
-    parsed = result["parsed"]
-    # three of the five sinks consume the anomaly union — materialize it once,
-    # EAGERLY: the count below fills the cache before the concurrent writers
-    # start, so they read cached blocks instead of racing to compute the
-    # not-yet-materialized union in parallel (duplicated work)
-    anomalies = result["anomalies"].persist()
-    anomalies.count()
-    routed = route_anomalies(anomalies, routing)
 
+RUN_METRICS = "run_metrics.json"
+
+# what write_run_sinks reads of parsed/ (the minute pivot's columns) and of
+# anomalies_routed/
+_PARSED_READ = (
+    "conv_id STRING, turn_idx INT, malformed BOOLEAN, ts_parsed TIMESTAMP, "
+    "level_ord INT"
+)
+_ROUTED_READ = T.StructType(
+    ANOMALY_SCHEMA.fields + [T.StructField("sink_name", T.StringType())]
+)
+
+
+def write_run_sinks(spark: SparkSession, out_dir: str, manifests: list[dict],
+                    started: float) -> dict:
+    """S4, S5 CSV, S6 and S8 from what the bucket batches wrote: one read of
+    ``parsed/`` and one of ``anomalies_routed/``. ``parsed`` and
+    ``malformed`` are the sums over the bucket ``manifests``,
+    ``sink_counts`` count the written routed rows, and ``wall_ms`` runs
+    from ``started`` (epoch seconds). ``run_metrics.json`` goes last, so
+    its presence means every other sink of the run is complete."""
     from .plans.pipeline import report_order
 
-    # the five sinks are independent given their (persisted) inputs — submit
-    # them concurrently so the cluster never idles between driver-side job
-    # submissions (standard multi-job scheduling; each write is its own job)
-    from concurrent.futures import ThreadPoolExecutor
+    # explicit read schemas: a run that wrote no rows leaves no file to
+    # infer one from
+    parsed = spark.read.schema(_PARSED_READ).parquet(os.path.join(out_dir, "parsed"))
+    routed = spark.read.schema(_ROUTED_READ).parquet(
+        os.path.join(out_dir, "anomalies_routed")
+    )
+    anomalies = routed.select(*ANOMALY_COLS)
 
-    def _w_turns():
-        parsed_turns_view(parsed).write.mode("overwrite").parquet(
-            f"{out_dir}/parsed_turns"
-        )
+    # the pivot keeps only the online fires of the anomalies
+    minute_stats(parsed, anomalies).write.mode("overwrite").parquet(
+        os.path.join(out_dir, "timeseries_minute")
+    )
+    # top-100 cap: JsonReporter.cpp:19
+    report_order(anomalies, 100).write.mode("overwrite").json(
+        os.path.join(out_dir, "report_json")
+    )
+    # top-1000 cap: CsvReporter.cpp:17
+    report_order(anomalies, 1000).write.mode("overwrite").option(
+        "header", True
+    ).csv(os.path.join(out_dir, "report_csv"))
 
-    def _w_routed():
-        routed.write.mode("overwrite").partitionBy("sink_name", "severity").parquet(
-            f"{out_dir}/anomalies_routed"
-        )
-
-    def _w_minutes():
-        result["minute_stats"].write.mode("overwrite").parquet(
-            f"{out_dir}/timeseries_minute"
-        )
-
-    def _w_json():
-        # top-100 cap: JsonReporter.cpp:19
-        report_order(anomalies, 100).write.mode("overwrite").json(
-            f"{out_dir}/report_json"
-        )
-
-    def _w_csv():
-        # top-1000 cap: CsvReporter.cpp:17
-        report_order(anomalies, 1000).write.mode("overwrite").option(
-            "header", True
-        ).csv(f"{out_dir}/report_csv")
-
-    try:
-        with ThreadPoolExecutor(max_workers=5) as ex:
-            futs = [ex.submit(f) for f in (_w_turns, _w_routed, _w_minutes,
-                                           _w_json, _w_csv)]
-            for f in futs:
-                f.result()
-
-        # per-sink counts (the "per-sink aggregate counts" correctness surface)
-        sink_counts = {
-            r["sink_name"]: r["n"]
-            for r in routed.groupBy("sink_name")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        }
-        parsed_n = parsed.filter(~F.col("malformed")).count()
-        malformed_n = parsed.filter(F.col("malformed")).count()
-        metrics = {
-            "run_time_iso": time.strftime("%Y-%m-%dT%H:%M:%S", time.gmtime()),
-            "parsed": parsed_n,
-            "malformed": malformed_n,
-            "emitted_anomalies": sum(sink_counts.values()),
-            "sink_counts": sink_counts,
-            "wall_ms": int((time.time() - t0) * 1000),
-        }
-        with open(f"{out_dir}/run_metrics.json", "w") as fh:
-            json.dump(metrics, fh, indent=2)
-    finally:
-        # a failed sink write must not leak the cached union
-        anomalies.unpersist()
+    sink_counts = {
+        r["sink_name"]: r["n"]
+        for r in routed.groupBy("sink_name")
+        .agg(F.count(F.lit(1)).alias("n"))
+        .collect()
+    }
+    metrics = {
+        "run_time_iso": time.strftime("%Y-%m-%dT%H:%M:%S", time.gmtime()),
+        "parsed": sum(m["parsed"] for m in manifests),
+        "malformed": sum(m["malformed"] for m in manifests),
+        "emitted_anomalies": sum(sink_counts.values()),
+        "sink_counts": sink_counts,
+        "wall_ms": int((time.time() - started) * 1000),
+    }
+    write_json_atomic(os.path.join(out_dir, RUN_METRICS), metrics)
     return metrics

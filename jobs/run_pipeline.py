@@ -7,7 +7,9 @@ Cluster usage (north rule deployment shape):
         --input <iceberg-table-or-parquet-dir> --output out/ \
         --buckets 64 [--synth N_CONVS]
 
-A re-run on the same --output resumes from the bucket manifests.
+A re-run on the same --output resumes from the bucket manifests. The
+output layout (routed anomalies, parsed turns, time series, reports, run
+metrics) is documented in sinks.py.
 
 Local sandbox usage:
 
@@ -70,18 +72,11 @@ def main() -> None:
         from intelligent_log_analysis_anomaly_detection_tool_spark.dashboard import (
             write_dashboard,
         )
-        from intelligent_log_analysis_anomaly_detection_tool_spark.operators.aggregates import (
-            minute_stats,
-        )
 
-        parsed = spark.read.parquet(os.path.join(args.output, "parsed"))
-        # minute_stats keeps only the online fires of the anomalies
-        anomalies = spark.read.parquet(
-            os.path.join(args.output, "anomalies_routed")
-        )
         graphs = write_dashboard(
-            os.path.join(args.output, "graphs"), parsed,
-            minute_stats(parsed, anomalies),
+            os.path.join(args.output, "graphs"),
+            spark.read.parquet(os.path.join(args.output, "parsed")),
+            spark.read.parquet(os.path.join(args.output, "timeseries_minute")),
         )
 
     print(json.dumps({

@@ -1,4 +1,8 @@
-"""A1-A4 aggregates + S7 parsed-turns sink vs oracle; full pipeline smoke."""
+"""A1-A4 aggregates + S7 parsed-turns sink vs oracle; the resumable job's
+run-level sinks (S4, S5 CSV, S6, S8) vs oracle."""
+
+import json
+import os
 
 import pandas as pd
 import pytest
@@ -20,12 +24,9 @@ def parsed_df(fixture_df):
     return df
 
 
-def test_minute_stats(parsed_df, oracle_result):
-    from intelligent_log_analysis_anomaly_detection_tool_spark.plans.pipeline import (
-        online_anomalies,
-    )
-
-    got = minute_stats(parsed_df, online_anomalies(parsed_df)).toPandas()
+def _assert_oracle_minutes(got, oracle_result):
+    """``got`` (a minute_stats frame as pandas) == the oracle minute pivot."""
+    got = got.copy()
     got["minute"] = (
         pd.to_datetime(got["minute"]).astype("int64") // 10**9
     ).where(got["minute"].notna()).astype("Int64")
@@ -40,6 +41,15 @@ def test_minute_stats(parsed_df, oracle_result):
         got[c] = got[c].astype("int64")
         want[c] = want[c].astype("int64")
     pd.testing.assert_frame_equal(got[cols], want[cols])
+
+
+def test_minute_stats(parsed_df, oracle_result):
+    from intelligent_log_analysis_anomaly_detection_tool_spark.plans.pipeline import (
+        online_anomalies,
+    )
+
+    got = minute_stats(parsed_df, online_anomalies(parsed_df)).toPandas()
+    _assert_oracle_minutes(got, oracle_result)
 
 
 def test_minute_stats_keeps_only_online_fires(parsed_df):
@@ -117,14 +127,22 @@ def test_parsed_turns_text_equality(parsed_df, oracle_result):
     pd.testing.assert_frame_equal(got, want)
 
 
-def test_full_pipeline_counts(spark, fixture_df, oracle_result, tmp_path):
-    """End-to-end run with sinks: per-sink counts == oracle per-detector counts."""
-    from intelligent_log_analysis_anomaly_detection_tool_spark.plans.pipeline import (
-        run_pipeline,
+@pytest.fixture(scope="module")
+def job_out(spark, fixture_df, tmp_path_factory):
+    """The output directory of one resumable-job run over the fixture."""
+    from intelligent_log_analysis_anomaly_detection_tool_spark.checkpoint import (
+        run_resumable,
     )
 
-    res = run_pipeline(spark, fixture_df, out_dir=str(tmp_path / "out"))
-    metrics = res["sink_counts"]
+    out = str(tmp_path_factory.mktemp("job") / "out")
+    run_resumable(spark, fixture_df, out)
+    return out
+
+
+def test_full_pipeline_counts(job_out, oracle_result):
+    """End-to-end run with sinks: per-sink counts == oracle per-detector counts."""
+    with open(os.path.join(job_out, "run_metrics.json")) as fh:
+        metrics = json.load(fh)
     oa = oracle_result["anomalies"]
     by_det = oa.groupby("detector").size().to_dict()
     want_counts = {
@@ -144,6 +162,32 @@ def test_full_pipeline_counts(spark, fixture_df, oracle_result, tmp_path):
     assert metrics["parsed"] == (~oracle_result["parsed"]["malformed"]).sum()
     assert metrics["malformed"] == oracle_result["parsed"]["malformed"].sum()
     assert metrics["emitted_anomalies"] == len(oa)
+
+
+def test_timeseries_minute_sink(spark, job_out, oracle_result):
+    """S6: the job's ``timeseries_minute/`` == the oracle minute pivot."""
+    got = spark.read.parquet(os.path.join(job_out, "timeseries_minute")).toPandas()
+    _assert_oracle_minutes(got, oracle_result)
+
+
+@pytest.mark.parametrize("sink,cap", [("report_json", 100), ("report_csv", 1000)])
+def test_report_sinks(spark, job_out, oracle_result, sink, cap):
+    """S4/S5: min(cap, n) anomalies, the oracle's first rows in O1 order."""
+    path = os.path.join(job_out, sink)
+    if sink == "report_json":
+        got = spark.read.json(path)
+    else:
+        got = spark.read.option("header", True).option("inferSchema", True).csv(path)
+    got = got.toPandas()
+
+    want = oracle_result["anomalies"].sort_values(
+        ["severity", "score", "window_end", "description"],
+        ascending=[False, False, False, True],
+    ).head(cap)
+    assert len(got) == min(cap, len(oracle_result["anomalies"]))
+    assert got["severity"].astype("int64").tolist() == want["severity"].tolist()
+    assert got["description"].tolist() == want["description"].tolist()
+    assert got["score"].to_numpy() == pytest.approx(want["score"].to_numpy())
 
 
 def test_with_minute_chunked_carry(spark, monkeypatch):

@@ -1,5 +1,8 @@
 """Kill-and-resume: interrupted run + resume == uninterrupted run."""
 
+import json
+import os
+
 import pandas as pd
 import pytest
 
@@ -46,8 +49,6 @@ def test_resume_after_injected_failure(spark, fixture_df, oracle_result, tmp_pat
     pd.testing.assert_frame_equal(a.drop(columns=["score"]), b.drop(columns=["score"]))
 
     # lineage totals == oracle totals
-    import json, os
-
     lineage = []
     for f in os.listdir(f"{out2}/_checkpoints"):
         with open(f"{out2}/_checkpoints/{f}") as fh:
@@ -76,3 +77,68 @@ def test_run_resumable_leaves_no_cache(spark, fixture_df, tmp_path,
     run_resumable(spark, fixture_df, str(tmp_path / "out"), n_buckets=8,
                   buckets_per_batch=4)
     assert persistent_rdds() - before == set()
+
+
+def test_crash_after_last_manifest_is_repaired(spark, fixture_df, tmp_path):
+    """A crash after the last manifest commits leaves the run-level sinks
+    unwritten: the resume processes no bucket but writes them, and a further
+    no-op resume writes nothing."""
+    from intelligent_log_analysis_anomaly_detection_tool_spark.checkpoint import (
+        completed_buckets,
+        run_resumable,
+    )
+
+    out = str(tmp_path / "out")
+    metrics = os.path.join(out, "run_metrics.json")
+    with pytest.raises(RuntimeError, match="injected failure"):
+        run_resumable(spark, fixture_df, out, n_buckets=8, buckets_per_batch=4,
+                      fail_after_buckets=8)
+    assert completed_buckets(out) == set(range(8))
+    assert not os.path.exists(metrics)
+
+    assert run_resumable(spark, fixture_df, out, n_buckets=8) == {}
+    with open(metrics) as fh:
+        assert json.load(fh)["parsed"] > 0
+    mtime = os.stat(metrics).st_mtime_ns
+
+    assert run_resumable(spark, fixture_df, out, n_buckets=8) == {}
+    assert os.stat(metrics).st_mtime_ns == mtime
+
+
+def test_run_resumable_keeps_session_overwrite_mode(spark, fixture_df, tmp_path):
+    """The bucket writes overwrite partitions dynamically through a write
+    option; the session's own partitionOverwriteMode is left as it was."""
+    from intelligent_log_analysis_anomaly_detection_tool_spark.checkpoint import (
+        run_resumable,
+    )
+
+    key = "spark.sql.sources.partitionOverwriteMode"
+    spark.conf.set(key, "STATIC")
+    try:
+        before = spark.conf.get(key)
+        run_resumable(spark, fixture_df, str(tmp_path / "out"), n_buckets=2,
+                      buckets_per_batch=2)
+        assert spark.conf.get(key) == before
+    finally:
+        spark.conf.unset(key)
+
+
+def test_run_resumable_on_empty_input(spark, tmp_path):
+    """No input rows: the buckets commit empty lineage and the run-level
+    sinks are still written (from explicit read schemas, as no data file
+    exists to infer one from)."""
+    from intelligent_log_analysis_anomaly_detection_tool_spark.checkpoint import (
+        run_resumable,
+    )
+    from intelligent_log_analysis_anomaly_detection_tool_spark.schema import (
+        TRANSCRIPTS_SCHEMA,
+    )
+
+    out = str(tmp_path / "out")
+    run_resumable(spark, spark.createDataFrame([], TRANSCRIPTS_SCHEMA), out,
+                  n_buckets=2)
+    with open(os.path.join(out, "run_metrics.json")) as fh:
+        metrics = json.load(fh)
+    assert (metrics["parsed"], metrics["malformed"], metrics["emitted_anomalies"],
+            metrics["sink_counts"]) == (0, 0, 0, {})
+    assert spark.read.parquet(os.path.join(out, "timeseries_minute")).count() == 0

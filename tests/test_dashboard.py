@@ -25,7 +25,7 @@ EXPECTED = [
 ]
 
 
-def test_dashboard_renders(spark, fixture_df, tmp_path):
+def test_dashboard_renders(spark, fixture_df, tmp_path, capsys):
     from intelligent_log_analysis_anomaly_detection_tool_spark.dashboard import (
         write_dashboard,
     )
@@ -35,7 +35,11 @@ def test_dashboard_renders(spark, fixture_df, tmp_path):
 
     parsed = parse_stage(fixture_df)
     out = str(tmp_path / "graphs")
+    capsys.readouterr()
     written = write_dashboard(out, parsed, minute_stats(parsed))
+    # stdout stays free for a caller's report (jobs/run_pipeline.py prints
+    # JSON there); the chart-12 skip note goes to stderr
+    assert capsys.readouterr().out == ""
 
     have_sklearn = True
     try:

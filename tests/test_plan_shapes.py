@@ -32,24 +32,31 @@ def test_enrich_is_broadcast_only(spark, fixture_df):
     assert p.count("BroadcastHashJoin") >= 2
 
 
-def test_routing_is_broadcast(spark, fixture_df):
-    from intelligent_log_analysis_anomaly_detection_tool_spark.functions.parse_select import (
-        parse_stage,
-    )
-    from intelligent_log_analysis_anomaly_detection_tool_spark.operators.enrich import dims
-    from intelligent_log_analysis_anomaly_detection_tool_spark.plans.pipeline import (
-        online_anomalies,
+def test_routing_has_no_join(spark, tmp_path):
+    """J5 is a literal map lookup: the routed plan has no join of any kind,
+    every ROUTING detector gets its sink and an unknown one ``sink_other``."""
+    from intelligent_log_analysis_anomaly_detection_tool_spark.schema import (
+        ANOMALY_SCHEMA,
+        ROUTING,
     )
     from intelligent_log_analysis_anomaly_detection_tool_spark.sinks import (
         route_anomalies,
     )
 
-    # union of detector branches -> non-constant detector column, so the
-    # routing join materializes as a real broadcast hash join
-    p = _plan(route_anomalies(online_anomalies(parse_stage(fixture_df)),
-                              dims(spark)["routing"]))
-    assert "SortMergeJoin" not in p
-    assert "BroadcastHashJoin" in p
+    detectors = [*ROUTING, "unknown"]
+    rows = [("c", i, d, 5, 0, None, None, 1.0, "s", "x")
+            for i, d in enumerate(detectors)]
+    # read back from parquet so the input is a file scan, not a local
+    # relation the optimizer could fold the lookup into
+    path = str(tmp_path / "anomalies")
+    spark.createDataFrame(rows, ANOMALY_SCHEMA).write.parquet(path)
+    routed = route_anomalies(spark.read.parquet(path))
+
+    assert "Join" not in _plan(routed)
+    got = {r["detector"]: r["sink_name"] for r in routed.collect()}
+    assert got == {**ROUTING, "unknown": "sink_other"}
+    assert routed.columns[0] == "detector"
+    assert routed.columns[-1] == "sink_name"
 
 
 def test_fused_online_single_sort(spark, fixture_pdf):
