@@ -44,8 +44,8 @@ def _noop_write(df) -> None:
 def _run_concurrent_pipeline(spark, tr) -> float:
     """The real job shape (plans.pipeline.run_concurrent_dag): parse once,
     then the online->minutes chain and the offline branches submitted
-    concurrently, with action-free plan construction overlapped with the
-    parse job. Returns wall seconds."""
+    concurrently, each branch building its own plan on its own thread while
+    the parse job runs. Returns wall seconds."""
     from intelligent_log_analysis_anomaly_detection_tool_spark.plans.pipeline import (
         run_concurrent_dag,
     )

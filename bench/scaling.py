@@ -66,9 +66,9 @@ def _measure(cpus: int) -> dict:
     rows = tr.count()
 
     # the engine's real concurrent job shape, shared with bench.py
-    # (plans.pipeline.run_concurrent_dag): parse-count submitted first,
-    # action-free branch plans constructed while it runs, then one writer
-    # thread per branch — identical job structure at every parallelism level
+    # (plans.pipeline.run_concurrent_dag): parse-count submitted first, then
+    # one pool task per branch that builds its plan, waits for the parse and
+    # writes its leaf — identical job structure at every parallelism level
     # host-condition accounting: this VM sees 15-22% hypervisor steal in
     # degraded windows, the noise source behind the ±2-3x wall swings
     cpu = CpuMix(os.getpid())

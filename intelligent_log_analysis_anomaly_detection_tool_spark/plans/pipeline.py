@@ -68,9 +68,9 @@ def offline_anomaly_builders(parsed: DataFrame, cfg: PipelineConfig = DEFAULT_CO
     """The offline analyzers as LAZY independent branch builders
     (main.cpp:367-409): name -> zero-arg callable returning the branch plan.
 
-    Building a branch runs no Spark job, so a caller can construct every
-    plan while another job runs and then submit the branches as concurrent
-    jobs (run_concurrent_dag does both)."""
+    Building a branch runs no Spark job, so a caller can build each plan
+    on its own thread while other jobs run and submit the branches as
+    concurrent jobs (run_concurrent_dag does both)."""
     return {
         "frequency": lambda: frequency_anomalies(parsed, cfg.frequency),
         "pattern": lambda: pattern_anomalies(parsed, cfg.pattern),
@@ -102,55 +102,88 @@ def run_concurrent_dag(
     online->minutes chain and the three offline analyzers run as concurrent
     jobs, ``action`` (default: a noop-format write) materializing each leaf.
 
-    The parse-materialize count is submitted FIRST, and every branch plan
-    (online union, frequency, pattern, timewindow, minute pivot) is
-    constructed while that job runs; none of them runs an action during
-    construction. The overlap is partial. On the 10k-row dag_mixed input
-    (4-core host), building the five plans takes ~3.3-7 s warm, depending
-    on the host's load, and makes ~11.4k py4j round trips; about half of
-    them are PySpark's per-call call-site capture
-    (``spark.python.sql.dataFrameDebugging.enabled``). The parse count takes
-    ~1 s, so the cluster sits idle for seconds in every warm pass (2.2-4.5 s
-    in one measured set). The pattern branch builds its signature base
-    inside its own plan and persists nothing.
+    The parse-materialize count is submitted FIRST. Each branch then runs
+    in its own pool task that builds its plan, waits for the parse and runs
+    its leaf: online->minutes (the persisted online union and the minute
+    pivot over it), pattern, frequency and timewindow. The two longest
+    branches, online->minutes and pattern, build first; frequency and
+    timewindow build once both lead plans are built. So a lead leaf starts
+    as soon as its plan is built and the parse is done, and the driver's
+    plan construction (py4j round trips, not cluster work) overlaps the
+    parse job and the lead jobs. The online task counts the online union
+    before its minutes leaf, so the cache is filled once, by one job,
+    whatever ``action`` reads of it. Every job runs in a job group named
+    after its branch (``dag.parse``, ``dag.online``, ``dag.pattern``,
+    ``dag.frequency``, ``dag.timewindow``). The pattern branch builds its
+    signature base inside its own plan and persists nothing.
 
     Returns the persisted frames (parsed and online, the only caches the
     DAG holds) so callers control unpersist timing. If the parse count or
-    any branch raises, both are released before the exception propagates:
-    the caller gets no frames to release them with.
+    any branch (its build or its leaf) raises, both are released before
+    the exception propagates: the caller gets no frames to release them
+    with.
     """
+    import threading
     from concurrent.futures import ThreadPoolExecutor
 
     if action is None:
         def action(df):  # noqa: E306 — default leaf materializer
             df.write.format("noop").mode("overwrite").save()
 
+    sc = transcripts.sparkSession.sparkContext
     parsed = parse_stage_pipeline(transcripts).persist()
     online = None
+
+    def _parse():
+        sc.setJobGroup("dag.parse", "parse")
+        return parsed.count()
+
+    # The online->minutes chain and the pattern leaf are the two longest
+    # branches. Frequency and timewindow start building only once both
+    # lead plans are built, so the lead builds do not share the driver
+    # with them and the lead jobs reach Spark's FIFO scheduler, which gives
+    # the first-submitted job the first free cores, ahead of theirs.
+    leads_built = {"online": threading.Event(), "pattern": threading.Event()}
+
+    def _build(name, build):
+        lead = leads_built.get(name)
+        try:
+            sc.setJobGroup(f"dag.{name}", name)
+            if lead is None:
+                for built in leads_built.values():
+                    built.wait()
+            return build()
+        finally:
+            # set even when the build raises, or the followers never start
+            if lead is not None:
+                lead.set()
+
+    def _online_plans():
+        nonlocal online
+        online = online_anomalies(parsed, cfg).persist()
+        return minute_stats(parsed, online)
+
+    def _online_then_minutes():
+        minutes_plan = _build("online", _online_plans)
+        parse_fut.result()
+        # fill the online cache before the minutes leaf reads it: a leaf
+        # action need not read it (a count prunes the fire-count join), and
+        # the caller gets online back as a filled cache
+        online.count()
+        action(minutes_plan)
+
+    def _offline(name, build):
+        plan = _build(name, build)
+        parse_fut.result()
+        action(plan)
+
     try:
         builders = offline_anomaly_builders(parsed, cfg)
-        with ThreadPoolExecutor(max_workers=4) as ex:
-            parse_fut = ex.submit(parsed.count)
-            # action-free plan construction, overlapped with the parse job
-            online = online_anomalies(parsed, cfg).persist()
-            freq_plan = builders["frequency"]()
-            pattern_plan = builders["pattern"]()
-            tw_plan = builders["timewindow"]()
-            minutes_plan = minute_stats(parsed, online)
-            parse_fut.result()
-
-            def _online_then_minutes():
-                # minutes reads the persisted online union — keep it behind
-                # the online count so concurrent jobs never race to fill
-                # that cache
-                online.count()
-                action(minutes_plan)
-
-            futs = [
-                ex.submit(_online_then_minutes),
-                ex.submit(lambda: action(freq_plan)),
-                ex.submit(lambda: action(pattern_plan)),
-                ex.submit(lambda: action(tw_plan)),
+        with ThreadPoolExecutor(max_workers=5) as ex:
+            parse_fut = ex.submit(_parse)
+            futs = [ex.submit(_online_then_minutes)] + [
+                ex.submit(_offline, name, builders[name])
+                for name in ("pattern", "frequency", "timewindow")
             ]
             for f in futs:
                 f.result()

@@ -16,6 +16,19 @@ Coalescing keeps at least ``defaultParallelism`` partitions once each would
 hold ``spark.sql.adaptive.coalescePartitions.minPartitionSize`` (1 MB), so
 large inputs keep their width: at local[4] the DAG's cached online union
 drops from 28 partitions to 7 on 10k rows.
+
+PySpark's call-site capture (``spark.python.sql.dataFrameDebugging.enabled``)
+is off. With it on, every Column operation walks the Python stack and
+makes extra py4j calls: building the DAG's five branch plans one after
+another (warm, the 10k-row seed-7 dag_mixed input, local[4]) made
+10.7k-11.6k round trips in 1.6-2.2 s with it on, and 4.2k-4.6k in 1.3 s
+with it off. All it buys is a Python ``file:line`` in the query context of
+runtime error messages. PySpark reads the flag once per process, the first
+time a Column is built (``pyspark.errors.utils._enable_debugging_cache``),
+so the first session of a process decides for every later one. To get the
+call sites back while debugging, pass
+``extra_conf={"spark.python.sql.dataFrameDebugging.enabled": "true"}`` to
+the first ``get_spark`` of the process.
 """
 
 from __future__ import annotations
@@ -121,6 +134,12 @@ def get_spark(
         # the description pandas UDFs).
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "20000")
+        # No Python call-site capture: with it on, every Column operation
+        # walks the Python stack and adds py4j calls (over half of a warm
+        # DAG plan build's round trips) only to put a Python file:line into
+        # runtime error messages. PySpark caches the flag per process when
+        # the first Column is built, so the first session decides.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         # Generous driver memory for local[32] runs on the 128 GiB box.
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))
         .config("spark.sql.parquet.compression.codec", "zstd")

@@ -3,41 +3,77 @@ measure must produce the same frames as the sequential plan builders."""
 
 import threading
 
+import pandas as pd
 import pytest
 
 
+def _sorted_rows(df):
+    pdf = df.toPandas()
+    return pdf.sort_values(list(pdf.columns)).reset_index(drop=True)
+
+
 def test_run_concurrent_dag_matches_sequential(spark, fixture_df):
+    """Every leaf, and the returned parsed and online frames, hold the rows
+    (and dtypes) of the sequential plan builders."""
     from intelligent_log_analysis_anomaly_detection_tool_spark.functions.parse_select import (
         parse_stage_pipeline,
     )
+    from intelligent_log_analysis_anomaly_detection_tool_spark.operators.aggregates import (
+        minute_stats,
+    )
     from intelligent_log_analysis_anomaly_detection_tool_spark.plans.pipeline import (
-        offline_anomalies,
+        offline_anomaly_builders,
         online_anomalies,
         run_concurrent_dag,
     )
 
-    leaves = []
+    leaves = {}
     lock = threading.Lock()
 
     def action(df):
-        kind = "minutes" if "minute" in df.columns else "anomaly"
-        n = df.count()
+        rows = _sorted_rows(df)
+        if "minute" in df.columns:
+            key = "minutes"
+        else:
+            (key,) = rows["detector"].unique()
         with lock:
-            leaves.append((kind, n))
+            assert key not in leaves
+            leaves[key] = rows
 
     frames = run_concurrent_dag(fixture_df, action=action)
     try:
-        # four materialized leaves: minutes + frequency + pattern + timewindow
-        assert len(leaves) == 4
-        assert sum(1 for k, _ in leaves if k == "minutes") == 1
-
         parsed_seq = parse_stage_pipeline(fixture_df)
-        assert frames["parsed"].count() == parsed_seq.count()
-        assert frames["online"].count() == online_anomalies(parsed_seq).count()
+        online_seq = online_anomalies(parsed_seq)
+        builders = offline_anomaly_builders(parsed_seq)
+        # four materialized leaves: minutes + frequency + pattern + timewindow
+        assert set(leaves) == {"minutes", *builders}
+        pd.testing.assert_frame_equal(
+            leaves["minutes"], _sorted_rows(minute_stats(parsed_seq, online_seq))
+        )
+        for name, build in builders.items():
+            pd.testing.assert_frame_equal(leaves[name], _sorted_rows(build()))
+        pd.testing.assert_frame_equal(
+            _sorted_rows(frames["parsed"]), _sorted_rows(parsed_seq)
+        )
+        pd.testing.assert_frame_equal(
+            _sorted_rows(frames["online"]), _sorted_rows(online_seq)
+        )
+    finally:
+        frames["parsed"].unpersist()
+        frames["online"].unpersist()
 
-        # the three offline anomaly leaves sum to the sequential offline union
-        offline_total = offline_anomalies(parsed_seq).count()
-        assert offline_total == sum(n for k, n in leaves if k == "anomaly")
+
+def test_run_concurrent_dag_labels_jobs_by_branch(spark, fixture_df):
+    """Each branch's jobs run in the job group ``dag.<branch>``."""
+    from intelligent_log_analysis_anomaly_detection_tool_spark.plans.pipeline import (
+        run_concurrent_dag,
+    )
+
+    frames = run_concurrent_dag(fixture_df, action=lambda df: df.count())
+    try:
+        tracker = spark.sparkContext.statusTracker()
+        for branch in ("parse", "online", "pattern", "frequency", "timewindow"):
+            assert tracker.getJobIdsForGroup(f"dag.{branch}"), branch
     finally:
         frames["parsed"].unpersist()
         frames["online"].unpersist()
@@ -96,4 +132,23 @@ def test_run_concurrent_dag_releases_caches_when_a_leaf_raises(fixture_df, persi
     before = persistent_rdds()
     with pytest.raises(RuntimeError, match="minutes leaf failed"):
         run_concurrent_dag(fixture_df, action=action)
+    assert persistent_rdds() - before == set()
+
+
+def test_run_concurrent_dag_releases_caches_when_a_build_raises(
+    monkeypatch, fixture_df, persistent_rdds
+):
+    """A branch whose plan build raises inside its pool task: the error
+    reaches the caller through the branch's future, and parsed and online
+    are released before it does. Pattern is a lead branch, so this also
+    checks that the branches waiting on the lead builds still start."""
+    from intelligent_log_analysis_anomaly_detection_tool_spark.plans import pipeline
+
+    def boom(*_args, **_kwargs):
+        raise RuntimeError("pattern build failed")
+
+    monkeypatch.setattr(pipeline, "pattern_anomalies", boom)
+    before = persistent_rdds()
+    with pytest.raises(RuntimeError, match="pattern build failed"):
+        pipeline.run_concurrent_dag(fixture_df, action=lambda df: df.count())
     assert persistent_rdds() - before == set()

@@ -1,5 +1,6 @@
-"""Per-job derived input-split sizing (round 4): the scaling-efficiency fix
-must stay a pure function with the documented clamps."""
+"""Session tuning. Per-job derived input-split sizing (round 4): the
+scaling-efficiency fix must stay a pure function with the documented
+clamps. PySpark call-site capture stays off for the process."""
 
 from intelligent_log_analysis_anomaly_detection_tool_spark.session import (
     derive_max_partition_bytes,
@@ -33,3 +34,12 @@ def test_mid_range_targets_waves():
 def test_degenerate_inputs_fall_back_to_cap():
     assert derive_max_partition_bytes(0, 8) == 128 * MIB
     assert derive_max_partition_bytes(10 * MIB, 0) == 128 * MIB
+
+
+def test_call_site_capture_off(spark):
+    # PySpark's per-Column Python stack walk only decorates runtime error
+    # messages; the engine turns it off for the whole process
+    from pyspark.errors.utils import is_debugging_enabled
+
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+    assert not is_debugging_enabled()
